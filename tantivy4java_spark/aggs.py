@@ -721,75 +721,22 @@ def _local_agg_plan(searcher, aggs: Dict[str, Agg], source) -> Optional[dict]:
     return plan
 
 
-_SQL_TYPES = {"long": "BIGINT", "integer": "INT", "short": "SMALLINT",
-              "byte": "TINYINT", "double": "DOUBLE", "float": "FLOAT",
-              "string": "STRING", "boolean": "BOOLEAN",
-              "timestamp": "TIMESTAMP"}
-
-
-def _values_df(spark, rows: List[tuple], schema) -> DataFrame:
-    """Typed-VALUES LocalRelation for small result tables: collect() serves
-    it driver-side with zero Spark jobs (createDataFrame(list|pandas) lowers
-    to a LogicalRDD whose collect launches a job).  Falls back to
-    createDataFrame for types VALUES can't express."""
-    try:
-        types = [_SQL_TYPES[f.dataType.typeName()] for f in schema.fields]
-    except KeyError:
-        return spark.createDataFrame(rows, schema)
-    if "TIMESTAMP" in types:
-        # timestamps are emitted as timestamp_micros(<long>) — session-tz
-        # independent — but only for tz-AWARE values (a naive datetime's
-        # instant depends on the collecting path's timezone convention;
-        # createDataFrame preserves that convention exactly)
-        import datetime as _dtm
-        for r in rows:
-            for v, t in zip(r, types):
-                if t == "TIMESTAMP" and v is not None and v.tzinfo is None:
-                    return spark.createDataFrame(rows, schema)
-    names = ", ".join("`" + f.name.replace("`", "``") + "`"
-                      for f in schema.fields)
-
-    def lit(v, t: str) -> str:
-        if v is None:
-            return f"CAST(NULL AS {t})"
-        if t == "STRING":
-            e = str(v).replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{e}'"
-        if t == "BOOLEAN":
-            return "true" if v else "false"
-        if t in ("DOUBLE", "FLOAT"):
-            return f"CAST({float(v)!r} AS {t})"  # repr: exact IEEE round-trip
-        if t == "TIMESTAMP":
-            import datetime as _dtm
-            epoch = _dtm.datetime(1970, 1, 1, tzinfo=_dtm.timezone.utc)
-            us = (v - epoch) // _dtm.timedelta(microseconds=1)  # exact int
-            return f"timestamp_micros({int(us)})"  # foldable -> LocalRelation
-        return f"CAST({int(v)} AS {t})"
-
-    if rows:
-        vals = ", ".join(
-            "(" + ", ".join(lit(v, t) for v, t in zip(r, types)) + ")"
-            for r in rows)
-        df = spark.sql(f"SELECT * FROM VALUES {vals} AS t({names})")
-        # align nullability with the requested schema: all-non-null VALUES
-        # infer nullable=false, but callers compare schemas against the
-        # cluster lowering.  element_at(map(k, c), k) is value-identical,
-        # deterministic, and nullable (a map lookup can miss), and the
-        # ConvertToLocalRelation rule folds the projection back into the
-        # LocalRelation — still zero jobs at collect().  (if(true, c, null)
-        # and element_at(array(c), 1) don't work: Spark 4's nullability
-        # inference sees through both.)
-        fixes, changed = [], False
-        for want, got in zip(schema.fields, df.schema.fields):
-            c = F.col("`" + want.name.replace("`", "``") + "`")
-            if want.nullable and not got.nullable:
-                c = F.element_at(F.create_map(F.lit("k"), c), F.lit("k"))
-                changed = True
-            fixes.append(c.alias(want.name))
-        return df.select(*fixes) if changed else df
-    nulls = ", ".join(f"CAST(NULL AS {t})" for t in types)
-    return spark.sql(
-        f"SELECT * FROM VALUES ({nulls}) AS t({names}) WHERE 1=0")
+def _local_agg_schema(searcher, name: str, agg: Agg):
+    """Output schema of ``agg`` from the zero-row cluster plan, memoized
+    per searcher: Catalyst analysis of the same plan costs ~90 ms."""
+    key = (name, repr(agg))
+    if key not in searcher._agg_schemas:
+        if isinstance(agg, Histogram) and agg.min_doc_count == 0 \
+                and agg.extended_bounds is not None:
+            # schema is identical with/without the empty-bucket fill, but
+            # apply_agg's fill path collects span endpoints — a Spark job
+            # even on a zero-row probe; derive the schema without it
+            import dataclasses
+            agg = dataclasses.replace(agg, min_doc_count=1,
+                                      extended_bounds=None)
+        searcher._agg_schemas[key] = apply_agg(
+            searcher.docs().limit(0), agg, name).schema  # plan-time, no job
+    return searcher._agg_schemas[key]
 
 
 def _local_aggregate(searcher, query, aggs: Dict[str, Agg],
@@ -803,8 +750,6 @@ def _local_aggregate(searcher, query, aggs: Dict[str, Agg],
     fall back to the cluster path on: float columns containing true NaN
     (pandas conflates NaN with null; Spark does not), NUL bytes in string
     keys (pandas groupby hash truncation), unsupported dtypes/aggs."""
-    import os
-
     import numpy as np
     import pandas as pd
 
@@ -816,24 +761,21 @@ def _local_aggregate(searcher, query, aggs: Dict[str, Agg],
         return None
     fields = sorted({f for _, keys, _, metrics in plan.values()
                      for f in list(keys) + [m.field for m in metrics.values()]})
-    path = os.path.join(searcher.index_dir, "docs")
-    if not os.path.isdir(path):
-        return None
     try:
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
         # dedupe: a metric over doc_id itself would otherwise request the
         # column twice and pyarrow raises (silent fallback to the slow path)
-        tbl = pq.read_table(
-            path, columns=["doc_id"] + [f for f in fields if f != "doc_id"])
+        tbl = searcher._local_dataset(["docs"]).to_table(
+            columns=["doc_id"] + [f for f in fields if f != "doc_id"])
         for f in fields:
             if pa.types.is_floating(tbl.schema.field(f).type):
                 col = tbl[f].drop_null()
                 if len(col) and pc.any(pc.is_nan(col)).as_py():
                     return None  # true NaN: Spark groups/sums it, pandas skips
         pdf = tbl.to_pandas()
-    except Exception:
+    except Exception as e:  # noqa: BLE001 - recorded, Spark path runs
+        searcher._local_read_failed(e)
         return None
     for f in fields:
         if pdf[f].dtype == object and len(pdf):
@@ -842,8 +784,6 @@ def _local_aggregate(searcher, query, aggs: Dict[str, Agg],
                     lambda v: isinstance(v, str) and "\x00" in v).any():
                 return None  # NUL in keys: pandas hash kernels truncate
     base = matched[["doc_id"]].merge(pdf, on="doc_id", how="inner")
-    spark = searcher.docs().sparkSession
-    probe = searcher.docs().limit(0)
     out: Dict[str, DataFrame] = {}
     def _key_grouped_recs(sub: pd.DataFrame, karr, metrics) -> List[dict]:
         """Group `sub` rows by the parallel key array; one rec per bucket."""
@@ -858,16 +798,7 @@ def _local_aggregate(searcher, query, aggs: Dict[str, Agg],
 
     for name, agg in aggs.items():
         kind, keys, size, metrics = plan[name]
-        schema_agg = agg
-        if isinstance(agg, Histogram) and agg.min_doc_count == 0 \
-                and agg.extended_bounds is not None:
-            # schema is identical with/without the empty-bucket fill, but
-            # apply_agg's fill path collects span endpoints — a Spark job
-            # even on a zero-row probe; derive the schema without it
-            import dataclasses
-            schema_agg = dataclasses.replace(agg, min_doc_count=1,
-                                             extended_bounds=None)
-        schema = apply_agg(probe, schema_agg, name).schema  # plan-time, no job
+        schema = _local_agg_schema(searcher, name, agg)
         recs: List[dict] = []
         if kind == "metric":
             recs.append(dict(_local_metric_vals(base[agg.field], agg, name)))
@@ -971,25 +902,13 @@ def _local_aggregate(searcher, query, aggs: Dict[str, Agg],
                     f"DataFrame that never collects to the driver)")
             return None
 
-        def _conv(v, dt):
-            if v is None or (np.isscalar(v) and pd.isna(v)):
-                return None
-            t = dt.typeName()
-            if t in ("long", "integer", "short", "byte"):
-                return int(v)
-            if t in ("double", "float"):
-                return float(v)
-            if t == "string":
-                return str(v)
-            if t == "boolean":
-                return bool(v)
-            if t == "timestamp":
-                return v  # tz-aware datetime (UTC) from the date branch
-            return v
+        def _null(v):  # pandas spells a missing metric NaN; Spark, null
+            return None if v is None or (np.isscalar(v) and pd.isna(v)) \
+                else v
 
-        rows = [tuple(_conv(r.get(f.name), f.dataType) for f in schema.fields)
+        rows = [tuple(_null(r.get(f.name)) for f in schema.fields)
                 for r in recs]
-        out[name] = _values_df(spark, rows, schema)
+        out[name] = searcher._frame(rows, schema)
     searcher.last_metrics["local_agg"] = 1
     return out
 
@@ -1029,7 +948,6 @@ def aggregate(searcher, query, aggs: Dict[str, Agg],
     if len(aggs) <= 1:
         return {name: apply_agg(base, agg, name)
                 for name, agg in aggs.items()}
-    spark = base.sparkSession
     base = base.persist()
     try:
         out = {}
@@ -1045,7 +963,7 @@ def aggregate(searcher, query, aggs: Dict[str, Agg],
                     f"bucket rows; use a coarser interval, or run it as a "
                     f"single aggregation (the single-agg path returns a lazy "
                     f"DataFrame that never collects to the driver)")
-            out[name] = _values_df(spark, [tuple(r) for r in rows], df.schema)
+            out[name] = searcher._frame([tuple(r) for r in rows], df.schema)
         return out
     finally:
         base.unpersist()

@@ -137,19 +137,12 @@ def _zip_index_ids(df: DataFrame):
     return df.mapInPandas(add_ids, schema), acc
 
 
-def _norm_id_udf():
-    @F.pandas_udf(T.IntegerType())
-    def _norm(lengths: pd.Series) -> pd.Series:
-        return pd.Series(fieldnorm_to_id(lengths.fillna(0).to_numpy()).astype(np.int32))
-    return _norm
-
-
 def _norm_id_expr(len_col):
     """Pure-JVM fieldnorm quantization: the 256-entry table is strictly
     increasing, so id == count(entries <= len) - 1 (len >= 0 always holds
-    for token counts).  Bit-identical to fieldnorm_to_id / the pandas UDF
-    (pinned by tests); removes the ArrowEvalPython stage from the docs
-    frame of every build (guide SS4.1: built-ins over UDFs)."""
+    for token counts).  Bit-identical to fieldnorm_to_id (pinned by
+    tests); removes the ArrowEvalPython stage from the docs frame of every
+    build (guide SS4.1: built-ins over UDFs)."""
     from tantivy4java_spark.fieldnorm import FIELDNORM_TABLE
     arr = F.lit([int(v) for v in FIELDNORM_TABLE])
     ln = F.coalesce(len_col, F.lit(0))

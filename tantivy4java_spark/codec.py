@@ -100,14 +100,6 @@ def decode_doc_block(buf: bytes, base: int, count: int | None = None) -> np.ndar
     return (np.cumsum(gaps.astype(np.int64)) + base).astype(np.int64)
 
 
-def encode_tf_block(tfs: np.ndarray) -> bytes:
-    return varint_encode(np.ascontiguousarray(tfs, dtype=np.uint64))
-
-
-def decode_tf_block(buf: bytes, count: int | None = None) -> np.ndarray:
-    return varint_decode(buf, count).astype(np.int64)
-
-
 def encode_blocks_segmented(group_change: np.ndarray, docs: np.ndarray,
                             tfs: np.ndarray, norms: np.ndarray,
                             block_size: int = BLOCK_SIZE,

@@ -23,9 +23,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 K1 = 1.2
 B = 0.75
 
@@ -42,20 +39,3 @@ def tf_norm(tf: float, doc_len: float, avgdl: float) -> float:
 
 def bm25(tf: float, df: int, doc_len: float, num_docs: int, avgdl: float) -> float:
     return idf_weight(df, num_docs) * tf_norm(tf, doc_len, avgdl)
-
-
-def bm25_col(tf: Column, df: Column, doc_len: Column,
-             num_docs: float, avgdl: float) -> Column:
-    """The same formula as a Catalyst expression (stays in codegen)."""
-    idf_w = F.log(F.lit(1.0) + (F.lit(float(num_docs)) - df + F.lit(0.5)) / (df + F.lit(0.5))) \
-        * F.lit(K1 + 1.0)
-    denom = tf + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * doc_len / F.lit(float(avgdl)))
-    return idf_w * tf / denom
-
-
-def bm25_sql(tf: str, df: str, doc_len: str, num_docs: str, avgdl: str) -> str:
-    """The same formula as an ANSI-SQL string (for DuckDB oracles)."""
-    return (
-        f"(ln(1.0 + ({num_docs} - {df} + 0.5) / ({df} + 0.5)) * {K1 + 1.0}) * "
-        f"{tf} / ({tf} + {K1} * (1.0 - {B} + {B} * {doc_len} / {avgdl}))"
-    )

@@ -22,7 +22,9 @@ Ties broken by ascending doc_id (tantivy breaks ties by DocAddress order).
 from __future__ import annotations
 
 import json
+import logging
 import os
+from collections import Counter
 from functools import reduce
 from typing import Dict, Iterator, List, Optional, Sequence, Tuple
 
@@ -38,7 +40,10 @@ from tantivy4java_spark import fsio
 from tantivy4java_spark import queries as Q
 from tantivy4java_spark.analysis import tokenize_text
 from tantivy4java_spark.fieldnorm import FIELDNORM_TABLE
+from tantivy4java_spark.frames import values_frame
 from tantivy4java_spark.scoring import B, K1, idf_weight
+
+_log = logging.getLogger(__name__)
 
 _DECODED_SCHEMA = T.StructType([
     T.StructField("field", T.StringType()),
@@ -52,6 +57,18 @@ _SCORED_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("score", T.DoubleType()),
 ])
+
+# fast-path hits: VALUES infers non-null columns, and keeping them saves a
+# nullability-widening projection on every hit frame
+_HITS_SCHEMA = T.StructType([T.StructField(f.name, f.dataType, False)
+                             for f in _SCORED_SCHEMA.fields])
+
+_EXPLAIN_SCHEMA = T.StructType([T.StructField(n, t()) for n, t in [
+    ("kind", T.StringType), ("field", T.StringType), ("term", T.StringType),
+    ("doc_id", T.LongType), ("tf", T.LongType), ("norm_id", T.IntegerType),
+    ("quantized_len", T.DoubleType), ("df", T.LongType),
+    ("num_docs", T.DoubleType), ("distance", T.IntegerType),
+    ("score", T.DoubleType)]])
 
 
 def _decode_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -83,17 +100,53 @@ class IndexSearcher:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir.rstrip("/")
-        self._stats = json.loads(fsio.read_text(
-            spark, fsio.join(self.index_dir, "stats.json")))
+        self.last_metrics: Dict[str, float] = {}
+        self._doc_source: Optional[DataFrame] = None
+        self._doc_source_id: str = "doc_id"
+        self._empties: Dict[str, DataFrame] = {}
+        self._warned: set = set()
+        self._stale = False
+        self._open(self._read_stats())
+
+    def _read_stats(self) -> dict:
+        return json.loads(fsio.read_text(
+            self.spark, fsio.join(self.index_dir, "stats.json")))
+
+    def _open(self, stats: dict) -> None:
+        """Load the committed index view: stats, metadata, and empty
+        memos of everything derived from them."""
+        self._stats = stats
         self.num_docs: int = self._stats["num_docs"]
         self.field_stats: Dict[str, dict] = self._stats["fields"]
         self._meta = self._load_metadata()
         self._df_cache: Dict[Tuple[str, str], int] = {}
-        self._arrow_types: Dict[Tuple[str, str], object] = {}
         self._frames: Dict[str, DataFrame] = {}
-        self.last_metrics: Dict[str, float] = {}
-        self._doc_source: Optional[DataFrame] = None
-        self._doc_source_id: str = "doc_id"
+        self._has_blockmeta: Optional[bool] = None
+        self._pq_ds_cache: Dict[tuple, object] = {}
+        self._agg_schemas: Dict[tuple, T.StructType] = {}
+
+    def _reopen(self) -> None:
+        """Drop the pinned file listings, and load the current commit if
+        the index moved on since this searcher opened it (apply_deletes
+        compacts the pinned files away)."""
+        self._pq_ds_cache.clear()
+        stats = self._read_stats()
+        if stats != self._stats:
+            for df in self._frames.values():
+                if df.is_cached:
+                    df.unpersist()
+            self._open(stats)
+            self.last_metrics["reopened"] = 1
+
+    def _frame(self, rows, schema: T.StructType) -> DataFrame:
+        """A job-free LocalRelation result frame (frames.values_frame); the
+        empty one is built once per schema."""
+        if rows:
+            return values_frame(self.spark, rows, schema)
+        key = schema.json()
+        if key not in self._empties:
+            self._empties[key] = values_frame(self.spark, [], schema)
+        return self._empties[key]
 
     def set_doc_source(self, df: DataFrame, id_col: str = "doc_id") -> None:
         """Register the source/doc-store table (Parquet-companion mode: the
@@ -152,7 +205,7 @@ class IndexSearcher:
         """Per-block WAND bounds (field, term, shard, first_doc, count,
         block_max_score) — written by the metadata-only merge.  None on
         legacy indexes that carry block_max_score inside the postings rows."""
-        if not hasattr(self, "_has_blockmeta"):
+        if self._has_blockmeta is None:
             self._has_blockmeta = fsio.isdir_nonempty(
                 self.spark, fsio.join(self.index_dir, "blockmeta"))
         if not self._has_blockmeta:
@@ -313,7 +366,7 @@ class IndexSearcher:
         return {p: idf_weight(d, self.num_docs) for p, d in dfs.items() if d > 0}
 
     def _empty_scored(self) -> DataFrame:
-        return self.spark.createDataFrame([], _SCORED_SCHEMA)
+        return self._frame([], _SCORED_SCHEMA)
 
     def _apply_deletes(self, scored: DataFrame) -> DataFrame:
         d = self._deletes()
@@ -976,8 +1029,11 @@ class IndexSearcher:
             # and scale semantics are the node evaluators' own)
             local = self._local_search_pdf(q)
             if local is not None:
-                rows = local.iloc[offset:] if offset else local
-                return self._local_scored_df(rows.head(limit))
+                rows = (local.iloc[offset:] if offset else local).head(limit)
+                if len(rows) == 0:
+                    return self._empty_scored()
+                return self._frame(list(zip(rows["doc_id"], rows["score"])),
+                                   _HITS_SCHEMA)
         elif prune and order_by_field:
             # field-ordered fast path: the local evaluator holds the FULL
             # match set (never score-pruned), so ordering by a doc value is
@@ -1008,10 +1064,6 @@ class IndexSearcher:
         if offset:
             out = out.offset(offset)
         return out.limit(limit)
-
-    _EXPLAIN_SCHEMA = ("kind string, field string, term string, doc_id long, "
-                       "tf long, norm_id int, quantized_len double, df long, "
-                       "num_docs double, distance int, score double")
 
     def explain(self, q: Q.Query, doc_id: int) -> DataFrame:
         """Per-term score components for one doc (Query.explain analog, Q15 —
@@ -1060,6 +1112,8 @@ class IndexSearcher:
         if not terms:
             raise ValueError("explain supports term-based queries")
         idf_map = self._idf_map(terms)
+        if not idf_map:  # no query term in the index
+            return self._frame([], _EXPLAIN_SCHEMA)
         shard = doc_id >> self._meta.get("shard_bits", 16)
         decoded = self._decoded_postings(list(idf_map), shards=[shard]) \
             .filter(F.col("doc_id") == doc_id)
@@ -1083,7 +1137,7 @@ class IndexSearcher:
         wildcard / termset): one row per matched dictionary term the doc
         actually contains, with its tf/df; score = the constant 1.0."""
         if not terms:
-            return self.spark.createDataFrame([], self._EXPLAIN_SCHEMA)
+            return self._frame([], _EXPLAIN_SCHEMA)
         pairs = [(field, t) for t in dict.fromkeys(terms)]
         shard = doc_id >> self._meta.get("shard_bits", 16)
         decoded = self._decoded_postings(pairs, shards=[shard]) \
@@ -1105,7 +1159,7 @@ class IndexSearcher:
     def _explain_phrase(self, q: Q.Phrase, doc_id: int) -> DataFrame:
         comp = self._phrase_components(q)
         if comp is None:
-            return self.spark.createDataFrame([], self._EXPLAIN_SCHEMA)
+            return self._frame([], _EXPLAIN_SCHEMA)
         matched, field, terms, idf_w = comp
         avgdl = self.avgdl(field)
         length = _fieldnorm_len_col(F.col("norm_id"))
@@ -1126,17 +1180,17 @@ class IndexSearcher:
         # one component row per phrase word: its df and idf contribution
         # (combined phrase idf = sum of these idf weights)
         dfs = self.term_dfs([(field, t) for t in sorted(set(terms))])
-        word_rows = self.spark.createDataFrame(
+        word_rows = self._frame(
             [("phrase-term", field, t, doc_id, None, None, None,
-              int(dfs[(field, t)]), float(self.num_docs), None,
-              float(idf_weight(dfs[(field, t)], self.num_docs)))
-             for t in terms], self._EXPLAIN_SCHEMA)
+              dfs[(field, t)], self.num_docs, None,
+              idf_weight(dfs[(field, t)], self.num_docs))
+             for t in terms], _EXPLAIN_SCHEMA)
         return phrase_row.unionByName(word_rows)
 
     def _explain_fuzzy(self, q: Q.Fuzzy, doc_id: int) -> DataFrame:
         expansion = self._fuzzy_expansion(q)
         if not expansion:
-            return self.spark.createDataFrame([], self._EXPLAIN_SCHEMA)
+            return self._frame([], _EXPLAIN_SCHEMA)
         dist_map = dict(expansion)
         base = self.explain(
             Q.Boolean(should=tuple(Q.Term(q.field, t)
@@ -1170,20 +1224,35 @@ class IndexSearcher:
         cache: repeated fast-path queries stop re-opening and re-parsing
         every parquet footer (measured ~half the per-query latency).  The
         file SET is pinned at first use, mirroring preload()'s Spark-side
-        cache semantics; a new IndexSearcher sees new files."""
+        cache semantics; a new IndexSearcher sees new files.  A missing dir
+        raises FileNotFoundError and is not memoized."""
         key = tuple(dirs)
-        cache = self.__dict__.setdefault("_pq_ds_cache", {})
+        cache = self._pq_ds_cache
         if key not in cache:
             import pyarrow.dataset as pads
             paths = [os.path.join(self.index_dir, d) for d in dirs]
-            if not all(os.path.isdir(p) for p in paths):
-                cache[key] = None
-            elif len(paths) == 1:
+            for p in paths:
+                if not os.path.isdir(p):
+                    raise FileNotFoundError(p)
+            if len(paths) == 1:
                 cache[key] = pads.dataset(paths[0], format="parquet")
             else:  # multiple dirs (per-segment tables): union dataset
                 cache[key] = pads.dataset(
                     [pads.dataset(p, format="parquet") for p in paths])
         return cache[key]
+
+    def _local_read_failed(self, exc: Exception) -> None:
+        """Record why a driver-side read failed (the query falls back to
+        the Spark paths), warning once per searcher and reason.  A missing
+        file marks the pinned view stale: _local_search_pdf reopens."""
+        reason = f"read_error:{type(exc).__name__}"
+        self.last_metrics["fallback_reason"] = reason
+        if isinstance(exc, FileNotFoundError):
+            self._stale = True
+        if reason not in self._warned:
+            self._warned.add(reason)
+            _log.warning("%s: driver fast path read failed (%s: %s); "
+                         "falling back to Spark", self.index_dir, reason, exc)
 
     @staticmethod
     def _pads_filter(filters):
@@ -1216,12 +1285,11 @@ class IndexSearcher:
         """Driver-side pyarrow read over index table dir(s), row-group
         pruned.  None when any dir is unreadable locally."""
         try:
-            ds = self._local_dataset(dirs)
-            if ds is None:
-                return None
-            return ds.to_table(filter=self._pads_filter(filters),
-                               columns=columns).to_pandas()
-        except Exception:
+            return self._local_dataset(dirs).to_table(
+                filter=self._pads_filter(filters),
+                columns=columns).to_pandas()
+        except Exception as e:  # noqa: BLE001 - recorded, Spark path runs
+            self._local_read_failed(e)
             return None
 
     def _local_postings_blocks(self, pairs) -> Optional[pd.DataFrame]:
@@ -1250,11 +1318,12 @@ class IndexSearcher:
         path = os.path.join(self.index_dir, "_deletes")
         if not os.path.isdir(path):
             return np.empty(0, dtype=np.int64)
-        try:
+        try:  # read afresh (not memoized): deletes land in place
             import pyarrow.parquet as pq
             t = pq.read_table(path, columns=["doc_id"])
             return t["doc_id"].to_numpy().astype(np.int64)
-        except Exception:
+        except Exception as e:  # noqa: BLE001 - recorded, Spark path runs
+            self._local_read_failed(e)
             return None
 
     def _local_sorted_search(self, q: Q.Query, field: str, ascending: bool,
@@ -1292,28 +1361,11 @@ class IndexSearcher:
                 kind="mergesort")
         rows = merged.iloc[offset:].head(limit) if offset \
             else merged.head(limit)
-        tn_conv = {"string": str, "boolean": bool,
-                   "double": float, "float": float}.get(tn, int)
-        data = [(int(d), float(s), tn_conv(v)) for d, s, v in
-                zip(rows["doc_id"], rows["score"], rows[field])]
         schema = T.StructType([T.StructField("doc_id", T.LongType(), False),
                                T.StructField("score", T.DoubleType(), False),
                                sf])
-        return self.spark.createDataFrame(data, schema)
-
-    def _local_scored_df(self, pdf: pd.DataFrame) -> DataFrame:
-        """(doc_id, score) pandas -> DataFrame backed by a VALUES literal
-        (Catalyst LocalRelation): collect() serves it driver-side without
-        launching a Spark job, so the fast path stays at native latency
-        end-to-end.  repr(float) round-trips IEEE-754 doubles exactly."""
-        if len(pdf) == 0:
-            return self._empty_scored()
-        vals = ", ".join(
-            f"(CAST({int(r.doc_id)} AS BIGINT), "
-            f"CAST({float(r.score)!r} AS DOUBLE))"
-            for r in pdf.itertuples())
-        return self.spark.sql(
-            f"SELECT * FROM VALUES {vals} AS t(doc_id, score)")
+        return self._frame(
+            list(zip(rows["doc_id"], rows["score"], rows[field])), schema)
 
     @staticmethod
     def _empty_pdf() -> pd.DataFrame:
@@ -1330,13 +1382,18 @@ class IndexSearcher:
         the two paths agree on scores to rounding noise."""
         if fsio.has_scheme(self.index_dir):
             return None
-        budget = {"rows": self.LOCAL_TOPK_MAX_ROWS}
-        pdf = self._local_eval(q, budget)
-        if pdf is None:
-            return None
-        dels = self._local_deletes_ids()
+        for attempt in range(2):
+            self._stale = False
+            pdf = self._local_eval(q, {"rows": self.LOCAL_TOPK_MAX_ROWS})
+            dels = None if pdf is None else self._local_deletes_ids()
+            if dels is not None or not self._stale or attempt:
+                break
+            # files of the pinned view are gone (apply_deletes compacted
+            # them away): reopen and evaluate once more
+            self._reopen()
         if dels is None:
             return None
+        self.last_metrics.pop("fallback_reason", None)
         if len(dels) and len(pdf):
             pdf = pdf[~pdf["doc_id"].isin(dels)]
         self.last_metrics["local_path"] = 1
@@ -1499,15 +1556,10 @@ class IndexSearcher:
         budget["rows"] -= self.num_docs
         if budget["rows"] < 0:
             return None
-        path = os.path.join(self.index_dir, "docs")
-        if not os.path.isdir(path):
+        pdf = self._local_parquet(["docs"], None, ["doc_id"])
+        if pdf is None:
             return None
-        try:
-            import pyarrow.parquet as pq
-            ids = pq.read_table(path, columns=["doc_id"])["doc_id"] \
-                .to_numpy().astype(np.int64)
-        except Exception:
-            return None
+        ids = pdf["doc_id"].to_numpy(np.int64)
         return pd.DataFrame({"doc_id": ids,
                              "score": np.ones(len(ids), dtype=np.float64)})
 
@@ -1780,18 +1832,13 @@ class IndexSearcher:
                              "score": np.ones(len(ids), dtype=np.float64)})
 
     def _local_arrow_type(self, table: str, col: str):
-        """Arrow type of `col` in an index table dir (memoized; None when
-        unreadable locally)."""
-        key = (table, col)
-        if key not in self._arrow_types:
-            try:
-                import pyarrow.dataset as ds
-                sch = ds.dataset(os.path.join(self.index_dir, table),
-                                 format="parquet").schema
-                self._arrow_types[key] = sch.field(col).type
-            except Exception:
-                self._arrow_types[key] = None
-        return self._arrow_types[key]
+        """Arrow type of `col` in an index table dir (from the memoized
+        dataset; None when unreadable locally)."""
+        try:
+            return self._local_dataset([table]).schema.field(col).type
+        except Exception as e:  # noqa: BLE001 - recorded, Spark path runs
+            self._local_read_failed(e)
+            return None
 
     def _local_eval_range(self, q: Q.Range,
                           budget: dict) -> Optional[pd.DataFrame]:
@@ -1910,6 +1957,11 @@ class IndexSearcher:
             # a MUST term with df=0 empties the whole intersection — it must
             # NOT silently drop out of the AND
             return self._empty_scored()
+        # a repeated clause counts once per occurrence (tantivy sums every
+        # clause), in the scores and in the shard bounds: its weight is
+        # scaled, which for c=2 is bit-identical to x + x
+        mult = Counter(pairs)
+        weights = {p: w * mult[p] for p, w in idf_map.items()}
         pairs = list(idf_map.keys())
         fields = sorted({f for f, _ in pairs})
         terms = sorted({t for _, t in pairs})
@@ -1923,7 +1975,7 @@ class IndexSearcher:
         est_rows = sum(min(self._df_cache.get(p, self.num_docs), total_shards_ub)
                        for p in pairs)
         if est_rows > self.MAX_DRIVER_SHARD_ROWS:
-            return self._scored_pruned_cluster(mode, pairs, idf_map, k)
+            return self._scored_pruned_cluster(mode, pairs, weights, mult, k)
         # shard bounds come from the tiny blockmeta table when present (the
         # metadata-only-merge layout); legacy indexes aggregate the postings
         # rows' embedded block_max column
@@ -1952,7 +2004,7 @@ class IndexSearcher:
         shards: Dict[int, dict] = {}
         for fld, trm, sh, cnt, bmax in meta:
             s = shards.setdefault(sh, {"bound": 0.0, "cnt": 0, "terms": set()})
-            s["bound"] += bmax
+            s["bound"] += bmax * mult[(fld, trm)]
             s["cnt"] += cnt
             s["terms"].add((fld, trm))
         if mode == "and":
@@ -1963,12 +2015,15 @@ class IndexSearcher:
         if not shards:
             return self._empty_scored()
 
+        # block-level skip: only where a doc's score IS one block's score
+        block_skip = len(pairs) == 1 and mult[pairs[0]] == 1
+
         def scored_for(shard_ids: Sequence[int],
                        min_block_max: Optional[float] = None) -> DataFrame:
             decoded = self._decoded_postings(
                 pairs, shards=shard_ids,
-                min_block_max=min_block_max if len(pairs) == 1 else None)
-            scored = self._score_decoded(decoded, idf_map)
+                min_block_max=min_block_max if block_skip else None)
+            scored = self._score_decoded(decoded, weights)
             if mode == "and":
                 agg = (scored.groupBy("doc_id")
                        .agg(F.sum("score").alias("score"),
@@ -2007,7 +2062,8 @@ class IndexSearcher:
 
     def _scored_pruned_cluster(self, mode: str,
                                pairs: List[Tuple[str, str]],
-                               idf_map: Dict[Tuple[str, str], float],
+                               weights: Dict[Tuple[str, str], float],
+                               mult: Dict[Tuple[str, str], int],
                                k: int) -> DataFrame:
         """Same two-phase shard WAND, but the bound table never leaves the
         cluster: phase-1 shard selection collects only a bounded prefix of
@@ -2024,10 +2080,15 @@ class IndexSearcher:
         src = self.blockmeta()
         if src is None:
             src = self.postings()
+        bmax = F.max("block_max_score")
+        if max(mult.values()) > 1:
+            bmax = bmax * F.element_at(F.create_map(*[
+                x for (fld, trm) in pairs
+                for x in (F.lit(fld + "\x00" + trm), F.lit(mult[(fld, trm)]))]),
+                F.concat_ws("\x00", F.col("field"), F.col("term")))
         bounds = (src.filter(cond)
                   .groupBy("field", "term", "shard")
-                  .agg(F.sum("count").alias("cnt"),
-                       F.max("block_max_score").alias("bmax"))
+                  .agg(F.sum("count").alias("cnt"), bmax.alias("bmax"))
                   .groupBy("shard")
                   .agg(F.sum("bmax").alias("bound"),
                        F.sum("cnt").alias("cnt"),
@@ -2040,12 +2101,14 @@ class IndexSearcher:
         bounds = bounds.select("shard", "bound", "cnt")
         self.last_metrics["shards_total"] = -1  # not enumerated (by design)
 
+        block_skip = len(pairs) == 1 and mult[pairs[0]] == 1
+
         def scored_for(shards_df: DataFrame,
                        min_block_max: Optional[float] = None) -> DataFrame:
             decoded = self._decoded_postings(
                 pairs, shards_df=shards_df,
-                min_block_max=min_block_max if len(pairs) == 1 else None)
-            scored = self._score_decoded(decoded, idf_map)
+                min_block_max=min_block_max if block_skip else None)
+            scored = self._score_decoded(decoded, weights)
             if mode == "and":
                 agg = (scored.groupBy("doc_id")
                        .agg(F.sum("score").alias("score"),
@@ -2070,8 +2133,8 @@ class IndexSearcher:
                 break
         if not phase1:
             return self._empty_scored()
-        p1_df = self.spark.createDataFrame(
-            [(s,) for s in phase1], "shard long")
+        p1_df = self._frame([(s,) for s in phase1], T.StructType(
+            [T.StructField("shard", T.LongType())]))
         top1 = (scored_for(p1_df)
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .limit(k).collect())

@@ -1,3 +1,5 @@
+import contextlib
+import itertools
 import os
 import shutil
 import sys
@@ -8,6 +10,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
+_JOB_GROUPS = itertools.count()
 
 
 @pytest.fixture(scope="session")
@@ -33,6 +36,33 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """Counts the Spark jobs a block launches, by job group::
+
+        with spark_jobs() as jobs:
+            df.collect()
+        assert jobs == []
+    """
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def counted():
+        group = f"spark_jobs_{next(_JOB_GROUPS)}"  # unique per session
+        jobs: list = []
+        sc.setJobGroup(group, "counted by the spark_jobs fixture")
+        try:
+            yield jobs
+        finally:
+            sc.setJobGroup("", "")
+            # job events reach the status store through the async listener
+            # bus; drain it so no job of the block is missed
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return counted
 
 
 @pytest.fixture()

@@ -16,9 +16,15 @@ from tantivy4java_spark.searcher import IndexSearcher
 
 
 @pytest.fixture(scope="module")
-def idx(spark, tmp_path_factory):
+def corpus():
     pdf = generate_pandas(0, 400, min_tokens=15, max_tokens=40)
     pdf["doc_id"] = range(400)
+    return pdf
+
+
+@pytest.fixture(scope="module")
+def idx(spark, tmp_path_factory, corpus):
+    pdf = corpus
     d = str(tmp_path_factory.mktemp("cw") / "idx")
     cfg = IndexConfig(fields=[FieldConfig("content", "text"),
                               FieldConfig("lang", "string")],
@@ -63,6 +69,48 @@ def test_cluster_path_matches_driver_path(spark, idx, qi, k, monkeypatch):
                for r in s_cluster.search(q, limit=k).collect()]
     assert s_cluster.last_metrics.get("shards_total") == -1  # cluster path ran
     assert cluster == driver
+
+
+REPEATED = [
+    Q.Boolean(should=[Q.Term("content", "return"),
+                      Q.Term("content", "return")]),    # repeated SHOULD
+    Q.Boolean(must=[Q.Term("content", "return"),
+                    Q.Term("content", "return")]),      # repeated MUST
+    Q.Boolean(should=[Q.Term("content", "return"),
+                      Q.Term("content", "shuffle"),
+                      Q.Term("content", "return")]),
+]
+
+
+@pytest.mark.parametrize("qi", range(len(REPEATED)))
+@pytest.mark.parametrize("k", [5, 50])
+def test_repeated_clause_scores_per_occurrence(spark, idx, corpus, qi, k,
+                                               monkeypatch):
+    """A clause given twice scores twice (tantivy sums every clause) on
+    both WAND paths, as on the driver fast path and in the golden scorer."""
+    from tests.golden import GoldenIndex
+    q = REPEATED[qi]
+    golden = [(d, round(sc, 9)) for d, sc in GoldenIndex(
+        corpus, "doc_id", text_fields={"content": "default"},
+        keyword_fields=["lang"]).topk(q, k)]
+
+    def rows(s):
+        return [(r["doc_id"], round(r["score"], 9))
+                for r in s.search(q, limit=k).collect()]
+
+    s_local = IndexSearcher(spark, idx)
+    assert rows(s_local) == golden
+    assert s_local.last_metrics.get("local_path") == 1
+
+    monkeypatch.setattr(IndexSearcher, "LOCAL_TOPK_MAX_ROWS", 0)
+    s_driver = IndexSearcher(spark, idx)
+    assert rows(s_driver) == golden
+    assert s_driver.last_metrics.get("shards_total", -1) >= 0
+
+    s_cluster = IndexSearcher(spark, idx)
+    monkeypatch.setattr(s_cluster, "MAX_DRIVER_SHARD_ROWS", 0)
+    assert rows(s_cluster) == golden
+    assert s_cluster.last_metrics.get("shards_total") == -1
 
 
 def test_cluster_path_respects_deletes(spark, idx, monkeypatch, tmp_path):

@@ -158,19 +158,136 @@ def test_cap_falls_back_to_wand(spark, idx, monkeypatch):
     assert got == _rows(s2.search(Q.Term("content", "import"), limit=5))
 
 
-def test_local_runs_zero_spark_jobs(spark, idx):
-    """The point of the fast path: building the top-k plan issues NO Spark
-    job (collect of the returned local relation is the only one)."""
+def test_spark_jobs_fixture_counts_a_job(spark, spark_jobs):
+    """Positive control: the old empty frame (createDataFrame) runs a job."""
+    from tantivy4java_spark.searcher import _SCORED_SCHEMA
+    with spark_jobs() as jobs:
+        spark.createDataFrame([], _SCORED_SCHEMA).collect()
+    assert len(jobs) >= 1
+
+
+def test_local_runs_zero_spark_jobs(spark, idx, spark_jobs):
+    """The point of the fast path: the whole search(...).collect() round
+    trip runs NO Spark job, for hits, zero hits, field order, a local terms
+    aggregation and the explain of missing terms."""
+    from tantivy4java_spark import aggs as A
     s = IndexSearcher(spark, idx)
-    sc = spark.sparkContext
-    sc.setJobGroup("local_topk_probe", "no Spark jobs expected")
-    try:
-        s.search(Q.Term("content", "shuffle"), limit=5)  # plan only
-        assert s.last_metrics.get("local_path") == 1
-        jobs = sc.statusTracker().getJobIdsForGroup("local_topk_probe")
-        assert list(jobs) == []
-    finally:
-        sc.setJobGroup("", "")
+    ops = {
+        "hit": lambda: s.search(Q.Term("content", "shuffle"), limit=5),
+        "zero_hit": lambda: s.search(Q.Term("content", "zzzmissing"),
+                                     limit=5),
+        "order_by_field": lambda: s.search(Q.Term("content", "import"),
+                                           limit=5, order_by_field="lang"),
+        "terms_agg": lambda: A.aggregate(
+            s, Q.Term("content", "import"),
+            {"by_lang": A.Terms("lang", size=10)})["by_lang"],
+        "explain_missing_term": lambda: s.explain(
+            Q.Term("content", "zzzmissing"), 0),
+        "explain_missing_phrase": lambda: s.explain(
+            Q.Phrase("content", ["public", "zzzmissing"]), 0),
+    }
+    hits = ("hit", "order_by_field", "terms_agg")
+    s.docs().schema  # the docs table's schema inference: one job per open
+    for name, op in ops.items():
+        for _ in range(2):  # first use and the memoized repeat
+            with spark_jobs() as jobs:
+                rows = op().collect()
+            assert jobs == [], name
+        assert (len(rows) == 0) == (name not in hits), name
+        if not name.startswith("explain"):
+            assert s.last_metrics.get("local_path") == 1, name
+
+
+def test_local_order_by_decimal_field(spark, tmp_path):
+    """Field order over a decimal column on the driver fast path (the
+    result frame once truncated decimals to int and failed the schema)."""
+    import decimal
+    from pyspark.sql import types as T
+    rows = [(i, "alpha " + ("gamma" if i % 2 else "delta"),
+             decimal.Decimal(f"{(i * 37) % 11}.{i:02d}")) for i in range(30)]
+    df = spark.createDataFrame(rows, T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("content", T.StringType()),
+        T.StructField("price", T.DecimalType(10, 2))]))
+    d = str(tmp_path / "idx")
+    build_index(spark, df, IndexConfig(fields=[FieldConfig("content", "text")],
+                                       id_cols=["doc_id", "price"],
+                                       content_col="content"),
+                d, doc_id_col="doc_id")
+    s = IndexSearcher(spark, d)
+    q = Q.Term("content", "gamma")
+    local = s.search(q, limit=5, order_by_field="price", ascending=True)
+    assert s.last_metrics.get("local_path") == 1
+    full = s.search(q, limit=5, order_by_field="price", ascending=True,
+                    prune=False)
+    assert [(f.name, f.dataType) for f in local.schema] \
+        == [(f.name, f.dataType) for f in full.schema]
+    assert local.collect() == full.collect()
+
+
+def test_empty_frames_keep_the_old_schema(spark, idx):
+    """The job-free empty frames have the names, types and nullability of
+    the createDataFrame([], ...) frames they replace, and are built once."""
+    from tantivy4java_spark.searcher import _SCORED_SCHEMA
+    old_scored = spark.createDataFrame([], _SCORED_SCHEMA).schema
+    old_explain = spark.createDataFrame(
+        [], "kind string, field string, term string, doc_id long, tf long, "
+            "norm_id int, quantized_len double, df long, num_docs double, "
+            "distance int, score double").schema
+    s = IndexSearcher(spark, idx)
+    assert s._empty_scored().schema == old_scored
+    assert s._empty_scored() is s._empty_scored()
+    zero = s.search(Q.Term("content", "zzzmissing"), limit=5)
+    assert zero.schema == old_scored
+    assert s.explain(Q.Term("content", "zzzmissing"), 0).schema == old_explain
+    assert s.explain(Q.Fuzzy("content", "zzzzzzzz", 1), 0).schema \
+        == old_explain
+
+
+def test_live_searcher_stays_local_after_apply_deletes(spark, idx, tmp_path):
+    """apply_deletes compacts away the files a live searcher pinned; the
+    searcher reopens on the new commit instead of leaving the fast path."""
+    import shutil
+    from tantivy4java_spark import maintenance as M
+    d2 = str(tmp_path / "idx2")
+    shutil.copytree(idx, d2)
+    q = Q.Term("content", "import")
+    s = IndexSearcher(spark, d2)
+    before = _rows(s.search(q, limit=N))
+    assert s.last_metrics.get("local_path") == 1
+    victim = before[0][0]
+    M.delete_by_query(spark, d2, Q.Range("doc_id", victim, victim))
+    assert M.apply_deletes(spark, d2) == 1
+    got = _rows(s.search(q, limit=N))
+    assert s.last_metrics.get("local_path") == 1
+    assert "fallback_reason" not in s.last_metrics
+    fresh = IndexSearcher(spark, d2)
+    assert got == _rows(fresh.search(q, limit=N))
+    assert victim not in {d for d, _ in got}
+
+
+def test_read_error_recorded_and_warned_once(spark, idx, monkeypatch,
+                                             caplog):
+    """A failed driver-side read is not silent: the reason lands in
+    last_metrics and one warning is logged per searcher and reason."""
+    import logging
+    s = IndexSearcher(spark, idx)
+
+    def denied(dirs):
+        raise PermissionError("denied")
+
+    monkeypatch.setattr(s, "_local_dataset", denied)
+    with caplog.at_level(logging.WARNING, logger="tantivy4java_spark"):
+        for _ in range(2):
+            got = _rows(s.search(Q.Term("content", "merge"), limit=5))
+            assert "local_path" not in s.last_metrics
+            assert s.last_metrics.get("fallback_reason") \
+                == "read_error:PermissionError"
+    warned = [r for r in caplog.records
+              if "read_error:PermissionError" in r.getMessage()]
+    assert len(warned) == 1
+    assert got == _rows(IndexSearcher(spark, idx).search(
+        Q.Term("content", "merge"), limit=5))
 
 
 def test_local_json_phrase_matches_cluster(spark, tmp_path_factory,
