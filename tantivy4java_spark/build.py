@@ -4,8 +4,8 @@ Mirrors the reference's build lifecycle (SURVEY.md §3.3) Spark-first:
 
   reference                                  here
   ---------------------------------------   ----------------------------------
-  IndexWriter N threads -> N segments        N doc-range segments, each a Spark
-  (native/src/index.rs:177)                  job writing independent Parquet
+  IndexWriter N threads -> N segments        N doc-range segments written by
+  (native/src/index.rs:177)                  one shared pass, one job per table
   writer.commit() -> opstamp                 manifest "add" line per segment
   QuickwitSplit.convertIndex + mergeSplits   merge job: re-block postings per
   (native/src/quickwit_split/merge_impl.rs)  (field,term,shard), global stats
@@ -49,12 +49,14 @@ Scale notes (the design target is ~10^12 files on a multi-executor cluster):
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import math
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from typing import Iterator, List, Optional
+from typing import Dict, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -95,7 +97,7 @@ def assign_doc_ids(df: DataFrame, order_cols: Optional[List[str]] = None,
     - ``order_cols``: global sort + row_number (exact, used at test scale and
       for golden rank-identity; one shuffle).
     - neither: scalable two-pass zipWithIndex — per-partition counts collected
-      (tiny), then offset + local ordinal inside mapInPandas.  Deterministic
+      (tiny), then offset + local ordinal as one JVM projection.  Deterministic
       for a fixed input file layout (doc_id = file-order position), which is
       the 10^12-scale mode.
     """
@@ -107,6 +109,17 @@ def assign_doc_ids(df: DataFrame, order_cols: Optional[List[str]] = None,
     return _zip_index_ids(df)[0]
 
 
+def partition_row_ids():
+    """(partition index, row number within the partition) as JVM
+    expressions.  Both number the rows of the partition being computed, not
+    of the task computing it: a cached frame first built inside a coalesced
+    or union task (the segment writer's tokenize cache) still gets its own
+    partition's numbers, where Python's TaskContext.partitionId() would give
+    the task's index and hand two partitions the same ids."""
+    pid = F.spark_partition_id().cast("long")
+    return pid, F.monotonically_increasing_id() - F.shiftleft(pid, 33)
+
+
 def _zip_index_ids(df: DataFrame):
     """zipWithIndex doc_ids; returns (df_with_ids, total_rows).  The total
     falls out of the per-partition counts — callers that need it (segment
@@ -116,25 +129,15 @@ def _zip_index_ids(df: DataFrame):
         .groupBy("_pid").count().collect()
     )
     counts = {r["_pid"]: r["count"] for r in part_counts}
-    offsets = {}
+    offsets = []
     acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    schema = T.StructType(df.schema.fields + [T.StructField("doc_id", T.LongType())])
-    b_offsets = offsets
-
-    def add_ids(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["doc_id"] = np.arange(seen, seen + len(pdf), dtype=np.int64) + b_offsets.get(pid, 0)
-            seen += len(pdf)
-            yield pdf
-
-    return df.mapInPandas(add_ids, schema), acc
+    for pid in range(df.rdd.getNumPartitions()):
+        offsets.append(F.lit(acc).cast("long"))
+        acc += counts.get(pid, 0)
+    pid, row = partition_row_ids()
+    return df.withColumn(
+        "doc_id", F.element_at(F.array(*offsets), (pid + 1).cast("int")) + row
+    ), acc
 
 
 def _norm_id_expr(len_col):
@@ -540,6 +543,26 @@ def active_segments(actions: List[dict]) -> List[int]:
     return act
 
 
+class _PhaseClock:
+    """Chained phase timer: each phase runs from the end of the one before,
+    so the phases of one run sum to its wall time by construction."""
+
+    def __init__(self):
+        self.start = self.t = time.time()
+        self.phases: Dict[str, float] = {}
+
+    def lap(self, name: str) -> None:
+        now = time.time()
+        self.phases[name] = self.phases.get(name, 0.0) + now - self.t
+        self.t = now
+
+    def extend(self, phases: Dict[str, float]) -> None:
+        """Chain on the phases of a nested clock."""
+        for name, sec in phases.items():
+            self.phases[name] = self.phases.get(name, 0.0) + sec
+            self.t += sec
+
+
 @dataclass
 class BuildStats:
     num_docs: int
@@ -550,23 +573,21 @@ class BuildStats:
     # embarrassingly-parallel part; commit/merge is the short serial tail)
     segment_wall_sec: float = 0.0
     merge_wall_sec: float = 0.0
+    # chained phase -> seconds (manifest, ids, seg-width, stats+cache,
+    # write, rename, merge); the values sum to wall_sec
+    phases: Dict[str, float] = dataclasses.field(default_factory=dict)
 
 
 class IndexBuilder:
     def __init__(self, spark: SparkSession, config: IndexConfig, index_dir: str,
                  use_sql_tokenizer: bool = True, num_segments: int = 1,
-                 shuffle_partitions: Optional[int] = None,
-                 segment_concurrency: int = 2):
+                 shuffle_partitions: Optional[int] = None):
         self.spark = spark
         self.config = config
         self.index_dir = index_dir.rstrip("/")
         self.use_sql_tokenizer = use_sql_tokenizer
         self.num_segments = num_segments
         self.shuffle_partitions = shuffle_partitions
-        # segments are independent jobs; submitting a few concurrently keeps
-        # the cluster saturated through each job's serial tail (driver-side
-        # threads — Spark's scheduler interleaves the stages)
-        self.segment_concurrency = max(1, segment_concurrency)
 
     # -- paths ------------------------------------------------------------
     # All metadata I/O goes through fsio so the index root can be any
@@ -750,52 +771,6 @@ class IndexBuilder:
             return df.repartition(self.shuffle_partitions, *cols)
         return df.repartition(*cols)
 
-    def _segment_write_jobs(self, docs: DataFrame, per_doc_term: DataFrame,
-                            seg_dir: str) -> list:
-        """Mutually independent write closures for ONE segment (inputs must
-        already be cached): postings, termstats, docs, positions."""
-        cfg = self.config
-        pos_fields = [fc.name for fc in cfg.fields if fc.has_positions]
-
-        def _write_positions():
-            # positions table (position-indexed fields only; delta-varint
-            # binary; includes json fields — per-dot-path positions for
-            # phrase-over-path)
-            (self._key_repartition(
-                per_doc_term
-                .filter(F.col("field").isin(pos_fields))
-                .select("field", "term", "doc_id", "norm_id", "pos_bin"),
-                "field", "term")
-             .sortWithinPartitions("field", "term", "doc_id")
-             .write.mode("overwrite").parquet(os.path.join(seg_dir, "positions")))
-
-        def _write_postings():
-            # block-encoded postings (skew-proof: keyed by (field,term,shard))
-            enc = _encode_blocks_fn(cfg.block_size, with_scores=False)
-            (self._key_repartition(
-                per_doc_term
-                .select("field", "term", "shard", "doc_id", "tf",
-                        F.col("norm_id").cast("long").alias("norm_id")),
-                "field", "term", "shard")
-             .sortWithinPartitions("field", "term", "shard", "doc_id")
-             .mapInPandas(enc, _POSTINGS_SCHEMA)
-             .write.mode("overwrite").parquet(os.path.join(seg_dir, "postings")))
-
-        def _write_termstats():
-            # per-segment term stats (for global df at merge)
-            (per_doc_term.groupBy("field", "term")
-             .agg(F.count(F.lit(1)).cast("long").alias("df"),
-                  F.sum("tf").cast("long").alias("total_tf"))
-             .write.mode("overwrite").parquet(os.path.join(seg_dir, "termstats")))
-
-        def _write_docs():
-            docs.write.mode("overwrite").parquet(os.path.join(seg_dir, "docs"))
-
-        jobs = [_write_postings, _write_termstats, _write_docs]
-        if pos_fields:
-            jobs.append(_write_positions)
-        return jobs
-
     def _stat_exprs(self) -> list:
         return ([F.count(F.lit(1)).alias("_n"),
                  F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi")]
@@ -819,62 +794,26 @@ class IndexBuilder:
             "wall_sec": round(time.time() - t0, 3),
         }
 
-    def _build_segment(self, seg_df: DataFrame, seg_id: int) -> dict:
-        """Single-segment build (streaming appends, kill-test mode, and the
-        one-segment fallback).  Multi-segment batch builds go through
-        build()'s batched path, which shares ONE tokenize pass + ONE stats
-        job across all pending segments."""
-        t0 = time.time()
-        seg_dir = self._p("segments", f"seg={seg_id:05d}")
-        docs = self._docs_frame(seg_df).persist()
-        per_doc_term = self._pdt_frame(seg_df).persist()
+    def _write_segments(self, src: DataFrame, seg_col, pending: List[int]
+                        ) -> Tuple[List[dict], Dict[str, float]]:
+        """Write the tables of every segment in ``pending`` from ONE shared
+        tokenize pass over ``src``; ``seg_col`` gives each row's segment id
+        (a doc-range function of doc_id for bulk builds, a literal for a
+        streaming append).  This is the only segment writer: bulk builds,
+        the kill test, streaming appends and add_documents all use it.
 
-        # The write jobs are mutually independent once per_doc_term / docs
-        # are cached, so they run CONCURRENTLY and the segment tail is the
-        # slowest job (the postings encode), not the sum.  The caches are
-        # materialized FIRST by dedicated jobs: letting the writers race
-        # to build them measured 46% slower at 8 cores (200k docs, 101.6 s
-        # vs 69.4 s serial) because concurrent first-use serializes on the
-        # block manager's per-partition load locks while the blocked tasks
-        # hold task slots — the expensive tokenize pass must run once at
-        # full cluster width before any fan-out.
-        srow = docs.agg(*self._stat_exprs()).collect()[0]
-        per_doc_term.count()
+        The docs/per-doc-term frames are computed ONCE with a ``_seg``
+        column and cached, per-segment stats are ONE groupBy("_seg") job,
+        and each output table is ONE write job partitioned by ``_seg``,
+        renamed afterwards into segments/seg=NNNNN/<table>.  A segment with
+        no rows in a table gets that table written empty, with the schema of
+        the frame its writer uses, so every segment table stays readable.
 
-        from concurrent.futures import ThreadPoolExecutor
-        jobs = self._segment_write_jobs(docs, per_doc_term, seg_dir)
-        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            futs = [ex.submit(j) for j in jobs]
-            for f in futs:
-                f.result()
-        per_doc_term.unpersist()
-        docs.unpersist()
-        return self._action_from_stats(seg_id, srow, t0)
-
-    def _build_segments_batched(self, with_ids: DataFrame,
-                                pending: List[int], nseg: int,
-                                seg_width: Optional[int], lock) -> None:
-        """Build all pending segments from ONE shared tokenize pass.
-
-        The former per-segment loop ran, per segment, a stats-agg job, a
-        cache-materialize count, and 4 write jobs — at 4 segments that is
-        ~24 driver-planned jobs in 2 concurrency waves, and at bench scale
-        the fixed per-job cost (planning + codegen + scheduling) dominated
-        the actual work (guide §1.2 step 1).  Here the docs/per-doc-term
-        frames are computed ONCE over all pending segments with a derived
-        ``_seg`` column (a doc-range function of doc_id — no join), cached,
-        per-segment stats collapse into ONE groupBy("_seg") job, and every
-        segment's write jobs are submitted concurrently so the tail is the
-        slowest single write, not waves of them.  On-disk layout, manifest
-        actions and resume semantics are unchanged (each segment still gets
-        its own directories and its own manifest "add")."""
-        t0 = time.time()
-        src = with_ids
-        if seg_width is not None and len(pending) < nseg:
-            src = with_ids.filter(
-                F.expr(f"doc_id div {seg_width}").isin(pending))
-        seg_col = (F.expr(f"doc_id div {seg_width}") if seg_width is not None
-                   else F.lit(0).cast("long"))
+        Returns the manifest ``add`` actions (``pending`` order) and the
+        chained phase times.  Nothing reaches the manifest here: the caller
+        appends the actions once every write of the call has finished, so a
+        failure mid-call commits none of its segments."""
+        clock = _PhaseClock()
         cfg = self.config
         dp = self.spark.sparkContext.defaultParallelism
         gd = self._docs_frame(src).withColumn("_seg", seg_col).persist()
@@ -885,119 +824,90 @@ class IndexBuilder:
         # tasks was the measured write-phase bottleneck
         gpdt = (self._pdt_frame(src).withColumn("_seg", seg_col)
                 .coalesce(dp).persist())
-        # materialize the shared caches at full cluster width, one job each
-        # (see _build_segment for why the writers must not race to build
-        # them); the stats agg doubles as the docs-cache builder
-        dbg = os.environ.get("SPARK_GRAFT_BUILD_DEBUG") == "1"
-
-        def _tlog(label, t_from):
-            if dbg:
-                import sys
-                print(f"[build-batched] {label}: "
-                      f"{time.time() - t_from:.3f}s", file=sys.stderr)
-            return time.time()
-
-        # The two cache-materialize jobs are independent (both read the
-        # with_ids cache; its partitions are cheap to load, so concurrent
-        # first-use lock contention is negligible — unlike the expensive
-        # tokenize cache, which each job builds exclusively for itself).
-        t = time.time()
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-        with _TPE(max_workers=2) as _ex:
-            f_stats = _ex.submit(
+        # Materialize both caches at full cluster width, one job each,
+        # BEFORE the writers fan out: writers racing to build the tokenize
+        # cache measured 46% slower at 8 cores (200k docs) — concurrent
+        # first-use serializes on the block manager's per-partition load
+        # locks while the blocked tasks hold task slots.  The stats agg
+        # doubles as the docs-cache builder; the two jobs are independent.
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            f_stats = ex.submit(
                 lambda: gd.groupBy("_seg").agg(*self._stat_exprs()).collect())
-            f_cnt = _ex.submit(gpdt.count)
+            f_cnt = ex.submit(gpdt.count)
             stat_rows = f_stats.result()
             f_cnt.result()
-        t = _tlog("stats+pdt-cache", t)
         stats_by_seg = {int(r["_seg"]): r for r in stat_rows}
+        clock.lap("stats+cache")
 
-        # ONE write job per OUTPUT TYPE across all pending segments,
-        # partitioned by _seg and renamed into the per-segment layout —
-        # 4 jobs total instead of 4 x len(pending) concurrent small jobs
-        # (which thrashed the scheduler and let AQE coalesce tiny per-
-        # segment shuffles into 1-task Python encodes).  File contents per
-        # segment are identical: the encode group key gains _seg, and
-        # segment doc ranges are disjoint.
-        tmp = self._p("segments", "_batch_tmp")
-        fsio.delete(self.spark, tmp)
-        pos_fields = [fc.name for fc in cfg.fields if fc.has_positions]
-
-        def _w_postings():
-            enc = _encode_blocks_fn(cfg.block_size, with_scores=False,
-                                    with_seg=True)
-            schema = T.StructType(
-                [T.StructField("_seg", T.LongType())] + _POSTINGS_SCHEMA.fields)
-            (self._key_repartition(
+        # ONE write job per table across all pending segments (not one per
+        # table per segment: small concurrent jobs thrashed the scheduler and
+        # let AQE coalesce tiny per-segment shuffles into 1-task Python
+        # encodes).  File contents per segment are unchanged: the encode
+        # group key gains _seg, and segment doc ranges are disjoint.
+        post_schema = T.StructType(
+            [T.StructField("_seg", T.LongType())] + _POSTINGS_SCHEMA.fields)
+        # size the docs files to the data (guide §6): 32 tasks each writing
+        # a sliver per segment made 128 tiny files for a 20k-doc build
+        total_docs = sum(int(r["_n"]) for r in stat_rows)
+        n_docs_out = min(dp, max(min(dp, 4), math.ceil(total_docs / 100_000)))
+        tables = {
+            # block-encoded postings (skew-proof: keyed by field,term,shard)
+            "postings": self._key_repartition(
                 gpdt.select("_seg", "field", "term", "shard", "doc_id", "tf",
                             F.col("norm_id").cast("long").alias("norm_id")),
                 "_seg", "field", "term", "shard")
-             .sortWithinPartitions("_seg", "field", "term", "shard", "doc_id")
-             .mapInPandas(enc, schema)
-             .write.mode("overwrite").partitionBy("_seg")
-             .parquet(fsio.join(tmp, "postings")))
-
-        def _w_termstats():
-            (gpdt.groupBy("_seg", "field", "term")
-             .agg(F.count(F.lit(1)).cast("long").alias("df"),
-                  F.sum("tf").cast("long").alias("total_tf"))
-             .write.mode("overwrite").partitionBy("_seg")
-             .parquet(fsio.join(tmp, "termstats")))
-
-        def _w_docs():
-            # size the docs files to the data (guide §6): 32 tasks each
-            # writing a sliver per segment made 128 tiny files for a 20k-doc
-            # build and cost more in task scheduling than the write itself
-            total_docs = sum(int(r["_n"]) for r in stat_rows)
-            n_out = min(dp, max(min(dp, 4), math.ceil(total_docs / 100_000)))
-            (gd.coalesce(n_out).write.mode("overwrite").partitionBy("_seg")
-             .parquet(fsio.join(tmp, "docs")))
-
-        def _w_positions():
-            (self._key_repartition(
+            .sortWithinPartitions("_seg", "field", "term", "shard", "doc_id")
+            .mapInPandas(_encode_blocks_fn(cfg.block_size, with_scores=False,
+                                           with_seg=True), post_schema),
+            # per-segment term stats (for global df at merge)
+            "termstats": gpdt.groupBy("_seg", "field", "term")
+            .agg(F.count(F.lit(1)).cast("long").alias("df"),
+                 F.sum("tf").cast("long").alias("total_tf")),
+            "docs": gd.coalesce(n_docs_out),
+        }
+        pos_fields = [fc.name for fc in cfg.fields if fc.has_positions]
+        if pos_fields:
+            # delta-varint positions of position-indexed fields (json fields
+            # too: per-dot-path positions for phrase-over-path)
+            tables["positions"] = self._key_repartition(
                 gpdt.filter(F.col("field").isin(pos_fields))
                 .select("_seg", "field", "term", "doc_id", "norm_id",
                         "pos_bin"),
-                "_seg", "field", "term")
-             .sortWithinPartitions("_seg", "field", "term", "doc_id")
-             .write.mode("overwrite").partitionBy("_seg")
-             .parquet(fsio.join(tmp, "positions")))
+                "_seg", "field", "term") \
+                .sortWithinPartitions("_seg", "field", "term", "doc_id")
 
-        from concurrent.futures import ThreadPoolExecutor
-        jobs = [_w_postings, _w_termstats, _w_docs]
-        subs = ["postings", "termstats", "docs"]
-        if pos_fields:
-            jobs.append(_w_positions)
-            subs.append("positions")
+        tmp = self._p("segments", f"_tmp_seg={pending[0]:05d}")
+        fsio.delete(self.spark, tmp)
 
-        def _timed_job(j, name):
-            tj = time.time()
-            j()
-            _tlog(f"write-{name}", tj)
+        def write(name):
+            (tables[name].write.mode("overwrite").partitionBy("_seg")
+             .parquet(fsio.join(tmp, name)))
 
-        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            for f in [ex.submit(_timed_job, j, n) for j, n in zip(jobs, subs)]:
-                f.result()
-        t = _tlog("write-all", t)
+        with ThreadPoolExecutor(max_workers=len(tables)) as ex:
+            list(ex.map(write, tables))
+        gpdt.unpersist()
+        gd.unpersist()
+        clock.lap("write")
 
-        # rename tmp/<sub>/_seg=<sid> -> segments/seg=NNNNN/<sub>
+        # rename tmp/<table>/_seg=<sid> -> segments/seg=NNNNN/<table>
+        actions = []
         for sid in pending:
             seg_dir = self._p("segments", f"seg={sid:05d}")
             fsio.makedirs(self.spark, seg_dir)
-            for sub in subs:
-                src_dir = fsio.join(tmp, sub, f"_seg={sid}")
-                dst_dir = fsio.join(seg_dir, sub)
+            for name, frame in tables.items():
+                src_dir = fsio.join(tmp, name, f"_seg={sid}")
+                dst_dir = fsio.join(seg_dir, name)
                 fsio.delete(self.spark, dst_dir)
                 if fsio.exists(self.spark, src_dir):
                     fsio.rename(self.spark, src_dir, dst_dir)
-                else:  # empty segment: keep an empty dir like the old path
-                    fsio.makedirs(self.spark, dst_dir)
-            action = self._action_from_stats(sid, stats_by_seg.get(sid), t0)
-            with lock:
-                self._append_manifest(action)
+                else:  # no rows: an empty table that still has its schema
+                    self.spark.createDataFrame(
+                        [], frame.drop("_seg").schema).write.parquet(dst_dir)
+            actions.append(self._action_from_stats(
+                sid, stats_by_seg.get(sid), clock.start))
         fsio.delete(self.spark, tmp)
-        gpdt.unpersist()
-        gd.unpersist()
+        clock.lap("rename")
+        return actions, clock.phases
 
     # -- merge / finalize ---------------------------------------------------
     def _segment_ok(self, seg_dir: str) -> bool:
@@ -1019,7 +929,7 @@ class IndexBuilder:
             files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
             for f in files:
                 pq.ParquetFile(os.path.join(pdir, f)).schema_arrow
-            return True
+            return bool(files)
         except Exception:
             return False
 
@@ -1223,7 +1133,6 @@ class IndexBuilder:
         # not their sum.  The shared `terms` cache is safe under concurrent
         # first-use: Spark's block manager takes a per-partition load lock,
         # so one job computes a partition and the others wait for the block.
-        from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=3) as ex:
             f_terms = ex.submit(_write_terms)
             f_docs = ex.submit(_write_docs)
@@ -1253,20 +1162,12 @@ class IndexBuilder:
     def build(self, df: DataFrame, order_cols: Optional[List[str]] = None,
               doc_id_col: Optional[str] = None,
               fail_after_segments: Optional[int] = None) -> BuildStats:
-        """Full build with resume: segments already in the manifest are skipped."""
-        t0 = time.time()
-        dbg = os.environ.get("SPARK_GRAFT_BUILD_DEBUG") == "1"
-
-        def _tlog(label, t_from):
-            if dbg:
-                import sys
-                print(f"[build-pre] {label}: {time.time() - t_from:.3f}s",
-                      file=sys.stderr)
-            return time.time()
-
+        """Full build with resume: segments already in the manifest are
+        skipped.  ``fail_after_segments=k`` (kill test) writes only the
+        first k pending segments, commits their adds, then raises."""
+        clock = _PhaseClock()
         fsio.makedirs(self.spark, self.index_dir)
         acts = self._manifest_actions()
-        _t = _tlog("manifest-read", t0)
         if any(a.get("action") == "compact" for a in acts):
             # after apply_deletes the active set is the compacted segment
             # only; a resume here would treat 0..n-1 as pending, rebuild
@@ -1302,8 +1203,8 @@ class IndexBuilder:
                     f"then, {len(files)} now / different set) — doc_id "
                     "assignment would not match the committed segments; "
                     "build into a fresh index directory instead")
+        clock.lap("manifest")
 
-        _t = _tlog("manifest-init", _t)
         total = None
         if doc_id_col is None and order_cols is None:
             # the zipWithIndex path scans the input twice; cache it first.
@@ -1319,11 +1220,11 @@ class IndexBuilder:
         # cluster width AFTER doc_id assignment (ids are position/column
         # derived, so the round-robin shuffle cannot change them).  No-op at
         # scale, where scan splits >= parallelism (guide §2.5 input skew).
-        _t = _tlog("assign-ids", _t)
         dp = self.spark.sparkContext.defaultParallelism
         if with_ids.rdd.getNumPartitions() < dp:
             with_ids = with_ids.repartition(dp)
         with_ids = with_ids.persist()
+        clock.lap("ids")
         nseg = max(1, self.num_segments)
         if nseg > 1:
             # doc-range segments: deterministic, independently committable
@@ -1333,50 +1234,42 @@ class IndexBuilder:
             seg_width = max(1, math.ceil(total / nseg))
         else:
             seg_width = None
-        _t = _tlog("seg-width", _t)
-
-        import threading
+        clock.lap("seg-width")
 
         pending = [sid for sid in range(nseg) if sid not in done]
-        manifest_lock = threading.Lock()
-        completed = 0
-
-        def run_segment(sid: int) -> int:
-            seg_df = with_ids
+        fail = (fail_after_segments is not None
+                and len(pending) >= fail_after_segments)
+        if fail:
+            pending = pending[:fail_after_segments]
+        if pending:
+            src, seg_col = with_ids, F.lit(0).cast("long")
             if seg_width is not None:
-                seg_df = with_ids.filter(
-                    (F.col("doc_id") >= sid * seg_width)
-                    & (F.col("doc_id") < (sid + 1) * seg_width))
-            action = self._build_segment(seg_df, sid)
-            with manifest_lock:
+                seg_col = F.expr(f"doc_id div {seg_width}")
+                if len(pending) < nseg:
+                    src = with_ids.filter(seg_col.isin(pending))
+            actions, seg_phases = self._write_segments(src, seg_col, pending)
+            clock.extend(seg_phases)
+            for action in actions:
                 self._append_manifest(action)
-            return sid
+            clock.lap("rename")
+        if fail:
+            with_ids.unpersist()
+            df.unpersist()
+            raise RuntimeError(f"injected failure after {len(pending)} "
+                               f"segments (kill test)")
 
-        if fail_after_segments is not None:
-            # kill-test mode: sequential, deterministic failure point
-            for sid in pending:
-                run_segment(sid)
-                completed += 1
-                if completed >= fail_after_segments:
-                    with_ids.unpersist()
-                    raise RuntimeError(
-                        f"injected failure after {completed} segments (kill test)")
-        elif pending:
-            self._build_segments_batched(with_ids, pending, nseg, seg_width,
-                                         manifest_lock)
-
-        t_merge = time.time()
         merge_action = self._merge(list(range(nseg)))
         self._append_manifest(merge_action)
         with_ids.unpersist()
         df.unpersist()
-        now = time.time()
-        wall = now - t0
+        clock.lap("merge")
+        wall = clock.t - clock.start
         n = merge_action["num_docs"]
         return BuildStats(num_docs=n, segments=nseg, wall_sec=wall,
                           docs_per_sec=n / wall if wall > 0 else 0.0,
-                          segment_wall_sec=t_merge - t0,
-                          merge_wall_sec=now - t_merge)
+                          segment_wall_sec=wall - clock.phases["merge"],
+                          merge_wall_sec=clock.phases["merge"],
+                          phases=clock.phases)
 
 
 def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,

@@ -16,16 +16,11 @@ SURVEY.md §1.1).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from tantivy4java_spark.build import IndexBuilder, active_segments
+from tantivy4java_spark.build import (IndexBuilder, active_segments,
+                                      partition_row_ids)
 from tantivy4java_spark.schema import IndexConfig
 
 SEG_SHIFT = 40  # up to 2^40 docs per micro-batch segment
@@ -37,39 +32,32 @@ def append_segment(builder: IndexBuilder, batch_df: DataFrame,
     (seg_id << SEG_SHIFT) space; returns the manifest Add action.  Shared by
     the streaming sink and the batch `add_documents` path (S2/S3 analog:
     IndexWriter.addDocument/addJson — incremental inserts become segments).
+    The segment goes through the build's one segment writer.
 
     If the batch already carries a ``doc_id`` column the caller owns the id
     space (the build_index ``doc_id_col`` contract): ids are used as-is and
     must stay unique across the whole index — appending a second internal
     doc_id would make the column ambiguous in every downstream select."""
+    seg_col = F.lit(seg_id).cast("long")
     if "doc_id" in batch_df.columns:
         # deterministic ids: no persist needed (re-evaluation is stable)
-        return builder._build_segment(
+        actions, _ = builder._write_segments(
             batch_df.withColumn("doc_id", F.col("doc_id").cast("long")),
-            seg_id)
-    base = seg_id << SEG_SHIFT
-    schema = T.StructType(batch_df.schema.fields
-                          + [T.StructField("doc_id", T.LongType())])
-
-    def add_ids(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["doc_id"] = (base + (pid << 24)
-                             + np.arange(seen, seen + len(pdf), dtype=np.int64))
-            seen += len(pdf)
-            yield pdf
-
-    # MUST pin one evaluation: doc_id depends on the physical partition
-    # layout (TaskContext.partitionId), and _build_segment evaluates this
-    # frame for several jobs (docs table, postings, positions, stats).  An
-    # unpersisted frame can re-evaluate under a different layout, silently
-    # giving the SAME row DIFFERENT ids across tables.
-    with_ids = batch_df.mapInPandas(add_ids, schema).persist()
+            seg_col, [seg_id])
+        return actions[0]
+    # ids are (seg_id << SEG_SHIFT) | (partition << 24) | row-in-partition.
+    # MUST pin one evaluation: they depend on the physical partition layout,
+    # and the segment writer reads this frame in several jobs (docs table,
+    # tokenize cache, stats).  An unpersisted frame can re-evaluate under a
+    # different layout, silently giving the SAME row DIFFERENT ids across
+    # tables.
+    pid, row = partition_row_ids()
+    with_ids = batch_df.withColumn(
+        "doc_id", F.lit(seg_id << SEG_SHIFT) + F.shiftleft(pid, 24) + row
+    ).persist()
     try:
-        return builder._build_segment(with_ids, seg_id)
+        actions, _ = builder._write_segments(with_ids, seg_col, [seg_id])
+        return actions[0]
     finally:
         with_ids.unpersist()
 
