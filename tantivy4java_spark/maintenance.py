@@ -6,7 +6,8 @@ deleteDocumentsByQuery(q), deleteAllDocuments(), garbageCollectFiles()
 segments carry until a merge physically removes them — mirrored here:
 
 - delete_* append doc_ids to an ``_deletes`` parquet dir + a manifest line;
-  the searcher anti-joins them at query time.
+  the searcher anti-joins them at query time.  On a POSIX root the match
+  set and the file come from the driver (pyarrow), with no Spark job.
 - apply_deletes() rewrites postings/docs dropping tombstoned docs and
   recomputes stats (the "merge preserving deletes" semantics of S7).
 """
@@ -15,9 +16,12 @@ from __future__ import annotations
 
 import json
 import os
-import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from tantivy4java_spark import fsio
@@ -31,16 +35,55 @@ def _append_manifest(spark: SparkSession, index_dir: str, action: dict) -> None:
 
 def delete_by_query(spark: SparkSession, index_dir: str, query: Q.Query) -> int:
     """Tombstone every doc matching the query; returns the count (opstamp
-    analog: the manifest line records it)."""
+    analog: the manifest line records it, with the path the delete took).
+
+    On a POSIX root the match set comes from the driver fast path, the
+    evaluator ``IndexSearcher.count`` uses, and its doc_ids land in
+    ``_deletes`` as one pyarrow file: no Spark job.  Where that path
+    declines (URI root, candidates past ``LOCAL_TOPK_MAX_ROWS``, an
+    unsupported node, a read error) the scoring plan runs once on Spark.
+    Both count only live docs, so a re-delete returns 0."""
     from tantivy4java_spark.searcher import IndexSearcher
     s = IndexSearcher(spark, index_dir)
-    matched = s.score_query(query).select("doc_id").distinct()
-    n = matched.count()
-    if n:
-        matched.write.mode("append").parquet(fsio.join(index_dir, "_deletes"))
-    _append_manifest(spark, index_dir, {"action": "delete", "num_docs": int(n),
-                                        "query": repr(query)})
+    q = Q.normalize(query)
+    action = {"action": "delete", "query": repr(query), "path": "driver"}
+    local = s._local_search_pdf(q)
+    if local is not None:
+        ids = np.unique(local["doc_id"].to_numpy(np.int64))
+        n = len(ids)
+        if n:
+            _write_tombstones(index_dir, ids)
+    else:
+        action["path"] = "spark"
+        if "fallback_reason" in s.last_metrics:
+            action["fallback_reason"] = s.last_metrics["fallback_reason"]
+        matched = s.score_query(q).select("doc_id").distinct().persist()
+        try:  # the count fills the cache the write reads: one scoring pass
+            n = matched.count()
+            if n:
+                matched.write.mode("append").parquet(
+                    fsio.join(index_dir, "_deletes"))
+        finally:
+            matched.unpersist()
+    _append_manifest(spark, index_dir, dict(action, num_docs=int(n)))
     return int(n)
+
+
+def _write_tombstones(index_dir: str, ids: np.ndarray) -> None:
+    """Append ``ids`` to a POSIX root's ``_deletes`` as one Parquet file.
+    It is written beside the dir and moved in with os.replace, so readers
+    never see a partial file; a temp a crash leaves ends in ``__new``,
+    which garbage_collect removes."""
+    name = f"part-{uuid.uuid4().hex}-driver.parquet"
+    tmp = os.path.join(index_dir, f"_deletes-{name}__new")
+    try:
+        pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64())}), tmp)
+        del_dir = os.path.join(index_dir, "_deletes")
+        os.makedirs(del_dir, exist_ok=True)
+        os.replace(tmp, os.path.join(del_dir, name))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def delete_by_term(spark: SparkSession, index_dir: str,
@@ -50,8 +93,6 @@ def delete_by_term(spark: SparkSession, index_dir: str,
 
 
 def delete_all(spark: SparkSession, index_dir: str) -> int:
-    from tantivy4java_spark.searcher import IndexSearcher
-    s = IndexSearcher(spark, index_dir)
     return delete_by_query(spark, index_dir, Q.MatchAll())
 
 
@@ -163,7 +204,7 @@ def apply_deletes(spark: SparkSession, index_dir: str) -> int:
             f"StreamingIndexWriter.refresh()) or rollback()")
     s = IndexSearcher(spark, index_dir)
     builder = IndexBuilder(spark, _config_from_meta(s._meta), index_dir)
-    tomb = spark.read.parquet(del_dir).distinct().persist()
+    tomb = s._deletes().distinct().persist()
     n_del = tomb.count()
 
     acts = builder._manifest_actions()

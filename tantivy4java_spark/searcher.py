@@ -63,6 +63,13 @@ _SCORED_SCHEMA = T.StructType([
 _HITS_SCHEMA = T.StructType([T.StructField(f.name, f.dataType, False)
                              for f in _SCORED_SCHEMA.fields])
 
+# the tombstone table: what spark.read.parquet infers from either writer
+# (Spark, or maintenance's pyarrow file), given so no inference job runs
+_DELETES_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
+
+# footer key under which Spark stores a table's Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 _EXPLAIN_SCHEMA = T.StructType([T.StructField(n, t()) for n, t in [
     ("kind", T.StringType), ("field", T.StringType), ("term", T.StringType),
     ("doc_id", T.LongType), ("tf", T.LongType), ("norm_id", T.IntegerType),
@@ -184,9 +191,30 @@ class IndexSearcher:
     # -- table access (DataFrames memoized; underlying scans stay lazy) -----
     def _table(self, name: str) -> DataFrame:
         if name not in self._frames:
-            self._frames[name] = self.spark.read.parquet(
+            schema = self._footer_schema(name)
+            reader = self.spark.read if schema is None \
+                else self.spark.read.schema(schema)
+            self._frames[name] = reader.parquet(
                 os.path.join(self.index_dir, name))
         return self._frames[name]
+
+    def _footer_schema(self, name: str) -> Optional[T.StructType]:
+        """The Spark schema of a POSIX root table, read from the footer
+        Spark wrote into its first file: the schema spark.read.parquet
+        infers, without the inference job.  None (Spark infers) on a URI
+        root, a partitioned dir or a footer without a Spark schema."""
+        if fsio.has_scheme(self.index_dir):
+            return None
+        try:
+            ds = self._local_dataset([name])
+        except (OSError, ValueError):  # Spark raises the canonical error
+            return None
+        meta = ds.schema.metadata or {}
+        root = os.path.join(self.index_dir, name)
+        if _SPARK_SCHEMA_KEY not in meta or \
+                any(os.path.dirname(f) != root for f in ds.files):
+            return None
+        return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
 
     def postings(self) -> DataFrame:
         """Posting blocks.  After a metadata-only merge the payload files
@@ -227,7 +255,8 @@ class IndexSearcher:
         if not fsio.isdir_nonempty(self.spark, path):
             return None
         if "_deletes" not in self._frames:
-            self._frames["_deletes"] = self.spark.read.parquet(path)
+            self._frames["_deletes"] = \
+                self.spark.read.schema(_DELETES_SCHEMA).parquet(path)
         return self._frames["_deletes"]
 
     def positions(self) -> DataFrame:
@@ -1316,7 +1345,10 @@ class IndexSearcher:
         None = a _deletes dir exists but could not be read locally (caller
         must fall back to the cluster path — never silently skip deletes)."""
         path = os.path.join(self.index_dir, "_deletes")
-        if not os.path.isdir(path):
+        # no visible file yet (a writer made the dir, or Spark's append has
+        # only its _temporary/ there): no deletes, as Spark reads it
+        if not os.path.isdir(path) or \
+                all(n[0] in "._" for n in os.listdir(path)):
             return np.empty(0, dtype=np.int64)
         try:  # read afresh (not memoized): deletes land in place
             import pyarrow.parquet as pq

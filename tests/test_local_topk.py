@@ -187,7 +187,6 @@ def test_local_runs_zero_spark_jobs(spark, idx, spark_jobs):
             Q.Phrase("content", ["public", "zzzmissing"]), 0),
     }
     hits = ("hit", "order_by_field", "terms_agg")
-    s.docs().schema  # the docs table's schema inference: one job per open
     for name, op in ops.items():
         for _ in range(2):  # first use and the memoized repeat
             with spark_jobs() as jobs:
