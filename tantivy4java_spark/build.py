@@ -7,8 +7,13 @@ Mirrors the reference's build lifecycle (SURVEY.md §3.3) Spark-first:
   IndexWriter N threads -> N segments        N doc-range segments written by
   (native/src/index.rs:177)                  one shared pass, one job per table
   writer.commit() -> opstamp                 manifest "add" line per segment
-  QuickwitSplit.convertIndex + mergeSplits   merge job: re-block postings per
-  (native/src/quickwit_split/merge_impl.rs)  (field,term,shard), global stats
+  QuickwitSplit.convertIndex + mergeSplits   commit: global terms, docs,
+  (native/src/quickwit_split/merge_impl.rs)  blockmeta and stats over the
+                                             segment dirs (no payload rewrite)
+  IndexWriter.merge (core/IndexWriter.java)  the segment writer again, fed the
+                                             segment dirs (decoded postings):
+                                             hierarchical merge levels and
+                                             apply_deletes' compaction
   txlog Add actions w/ stats                 _manifest/<n>.json versioned
   (native/src/txlog/actions.rs:182-241)      actions enabling zero-recompute
                                              resume and lock-free appends
@@ -17,16 +22,19 @@ Physical layout under ``index_dir``:
   docs/        doc_id, <id_cols>, content_sha256, len_<f>, norm_<f>
   segments/seg=NNNNN/postings/   field, term, shard, block_id, first_doc,
                last_doc, count, docs_bin, tfs_bin, norms_bin, max_tf,
-               min_norm_id, block_max_score — payloads stay here after the
-               METADATA-ONLY merge (stats.json lists the dirs); segment doc
+               min_norm_id — payloads stay here after the METADATA-ONLY
+               merge (stats.json lists the dirs; a hierarchical merge level
+               writes segments/merged_L<level>_<g>/ instead); segment doc
                ranges are disjoint and files are clustered by
                (field, term, shard, doc_id), so the union is the merged
                doc-ordered stream
   blockmeta/   field, term, shard, first_doc, count, block_max_score —
                decode-free per-block WAND bounds computed at merge from
                (max_tf, min_norm_id) + global idf/avgdl
-  positions/   field, term, doc_id, positions array<int> (per-segment dirs,
-               listed in stats)
+  segments/<seg>/positions/   field, term, doc_id, norm_id, pos_bin
+               (delta-varint positions; listed in stats)
+  segments/<seg>/termstats/, segments/<seg>/docs/   the segment's df and
+               total_tf per term, and its docs rows
   terms/       field, term, df, total_tf (range-sharded, sorted)
   stats.json   per-field num_docs / total_tokens / avgdl (+ global num_docs,
                postings_dirs, positions_dirs)
@@ -40,9 +48,10 @@ Scale notes (the design target is ~10^12 files on a multi-executor cluster):
   lists are concatenations, never re-sorts.
 - segments are doc-range slices committed independently -> an interrupted
   build resumes from the manifest without recomputing finished segments.
-- the only shuffles are (a) ONE repartition by (_seg,field,term,shard)
-  across all segments of a batch build and (b) the same key at merge; both
-  scale horizontally with executors.
+- the only shuffles are ONE repartition by (_seg,field,term,shard) across
+  all segments a segment-writer pass writes (a batch build, a merge level,
+  a compaction) and the commit's term/docs/blockmeta tables; all scale
+  horizontally with executors.
 - tokenization defaults to the pure-Catalyst expression (whole-stage codegen,
   zero Python); the pandas-UDF path is kept for golden parity tests.
 """
@@ -56,6 +65,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import reduce
 from typing import Dict, Iterator, List, Optional, Tuple
 
 import numpy as np
@@ -72,7 +82,9 @@ from tantivy4java_spark.fieldnorm import fieldnorm_to_id
 from tantivy4java_spark.schema import FieldConfig, IndexConfig
 from tantivy4java_spark.scoring import B, K1
 
-_POSTINGS_SCHEMA = T.StructType([
+# the encode's block rows: the postings table plus its ``_seg`` partition
+_BLOCKS_SCHEMA = T.StructType([
+    T.StructField("_seg", T.LongType()),
     T.StructField("field", T.StringType()),
     T.StructField("term", T.StringType()),
     T.StructField("shard", T.LongType()),
@@ -85,7 +97,6 @@ _POSTINGS_SCHEMA = T.StructType([
     T.StructField("norms_bin", T.BinaryType()),
     T.StructField("max_tf", T.LongType()),
     T.StructField("min_norm_id", T.LongType()),
-    T.StructField("block_max_score", T.DoubleType()),
 ])
 
 
@@ -421,31 +432,22 @@ def _tokenize_agg_fn(field: str, tokenizer: str, limit: int):
     return run
 
 
-def _group_change(pdf: pd.DataFrame, with_seg: bool = False) -> np.ndarray:
-    """First-row-of-([seg,]field,term,shard)-group marker over a sorted
-    frame.  ``with_seg`` adds the batched-build ``_seg`` column to the key
-    (segment doc ranges are disjoint, so within one segment the key is
-    equivalent to (field,term,shard))."""
-    n = len(pdf)
-    f = pdf["field"].to_numpy()
-    t = pdf["term"].to_numpy()
-    sh = pdf["shard"].to_numpy()
-    change = np.ones(n, dtype=bool)
-    if n > 1:
-        change[1:] = (f[1:] != f[:-1]) | (t[1:] != t[:-1]) | (sh[1:] != sh[:-1])
-        if with_seg:
-            sg = pdf["_seg"].to_numpy()
-            change[1:] |= sg[1:] != sg[:-1]
+def _group_change(pdf: pd.DataFrame) -> np.ndarray:
+    """First-row-of-(_seg,field,term,shard)-group marker over a sorted
+    frame (segment doc ranges are disjoint, so within one segment the key
+    is equivalent to (field,term,shard))."""
+    change = np.zeros(len(pdf), dtype=bool)
+    change[:1] = True
+    for c in ("_seg", "field", "term", "shard"):
+        v = pdf[c].to_numpy()
+        change[1:] |= v[1:] != v[:-1]
     return change
 
 
-def _blocks_frame(pdf: pd.DataFrame, blocks: dict,
-                  with_seg: bool = False) -> pd.DataFrame:
+def _blocks_frame(pdf: pd.DataFrame, blocks: dict) -> pd.DataFrame:
     ri = blocks["row_index"]
-    out = {}
-    if with_seg:
-        out["_seg"] = pdf["_seg"].to_numpy()[ri].astype(np.int64)
-    out.update({
+    return pd.DataFrame({
+        "_seg": pdf["_seg"].to_numpy()[ri].astype(np.int64),
         "field": pdf["field"].to_numpy()[ri],
         "term": pdf["term"].to_numpy()[ri],
         "shard": pdf["shard"].to_numpy()[ri].astype(np.int64),
@@ -458,18 +460,13 @@ def _blocks_frame(pdf: pd.DataFrame, blocks: dict,
         "norms_bin": blocks["norms_bin"],
         "max_tf": blocks["max_tf"],
         "min_norm_id": blocks["min_norm_id"],
-        "block_max_score": blocks["block_max_score"],
     })
-    return pd.DataFrame(out)
 
 
-def _encode_blocks_fn(block_size: int, with_scores: bool,
-                      norm_decode=None, avgdl_map=None,
-                      with_seg: bool = False):
-    """mapInPandas: ([_seg,]field,term,shard,doc_id,tf,norm_id[,idf_w]) ->
-    block rows.
+def _encode_blocks_fn(block_size: int):
+    """mapInPandas: (_seg,field,term,shard,doc_id,tf,norm_id) -> block rows.
 
-    Input partitions sorted by ([_seg,]field,term,shard,doc_id); fully
+    Input partitions sorted by (_seg,field,term,shard,doc_id); fully
     vectorized — the only per-block Python is byte-buffer slicing (codec
     segmented path).
     """
@@ -478,48 +475,13 @@ def _encode_blocks_fn(block_size: int, with_scores: bool,
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-            tfs = pdf["tf"].to_numpy(dtype=np.int64)
-            norms = pdf["norm_id"].to_numpy(dtype=np.int64)
-            scores = None
-            if with_scores:
-                idf_w = pdf["idf_w"].to_numpy(dtype=np.float64)
-                avgdl = pdf["field"].map(avgdl_map).to_numpy(dtype=np.float64)
-                lens = norm_decode[norms].astype(np.float64)
-                scores = idf_w * tfs / (tfs + K1 * (1.0 - B + B * lens / avgdl))
             blocks = codec.encode_blocks_segmented(
-                _group_change(pdf, with_seg), docs, tfs, norms, block_size,
-                scores)
-            yield _blocks_frame(pdf, blocks, with_seg)
+                _group_change(pdf), pdf["doc_id"].to_numpy(dtype=np.int64),
+                pdf["tf"].to_numpy(dtype=np.int64),
+                pdf["norm_id"].to_numpy(dtype=np.int64), block_size)
+            yield _blocks_frame(pdf, blocks)
 
     return encode
-
-
-def _reblock_fn(block_size: int):
-    """Intermediate-level merge: decode + concat + re-block postings without
-    scoring (global idf/avgdl are only known at the final level)."""
-
-    def merge(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            counts = pdf["count"].to_numpy(dtype=np.int64)
-            vals = codec.decode_blocks_concat(
-                pdf["first_doc"].to_numpy(dtype=np.int64), counts,
-                list(pdf["docs_bin"]), list(pdf["tfs_bin"]),
-                list(pdf["norms_bin"]))
-            bov = vals["block_of_value"]
-            vpdf = pd.DataFrame({
-                "field": pdf["field"].to_numpy()[bov],
-                "term": pdf["term"].to_numpy()[bov],
-                "shard": pdf["shard"].to_numpy()[bov],
-            })
-            blocks = codec.encode_blocks_segmented(
-                _group_change(vpdf), vals["doc_id"], vals["tf"],
-                vals["norm_id"], block_size, None)
-            yield _blocks_frame(vpdf, blocks)
-
-    return merge
 
 
 def active_segments(actions: List[dict]) -> List[int]:
@@ -794,36 +756,105 @@ class IndexBuilder:
             "wall_sec": round(time.time() - t0, 3),
         }
 
+    # -- the segment writer: sources, then table writes ---------------------
     def _write_segments(self, src: DataFrame, seg_col, pending: List[int]
                         ) -> Tuple[List[dict], Dict[str, float]]:
-        """Write the tables of every segment in ``pending`` from ONE shared
-        tokenize pass over ``src``; ``seg_col`` gives each row's segment id
-        (a doc-range function of doc_id for bulk builds, a literal for a
-        streaming append).  This is the only segment writer: bulk builds,
-        the kill test, streaming appends and add_documents all use it.
+        """Write the tables of every segment in ``pending`` from the
+        documents ``src``; ``seg_col`` gives each row's segment id (a
+        doc-range function of doc_id for bulk builds, a literal for a
+        streaming append).  Bulk builds, the kill test, streaming appends
+        and add_documents all write here; see _write_tables."""
+        return self._write_tables(
+            self._docs_frame(src).withColumn("_seg", seg_col),
+            self._pdt_frame(src).withColumn("_seg", seg_col), None,
+            {sid: self._p("segments", f"seg={sid:05d}") for sid in pending})
 
-        The docs/per-doc-term frames are computed ONCE with a ``_seg``
-        column and cached, per-segment stats are ONE groupBy("_seg") job,
-        and each output table is ONE write job partitioned by ``_seg``,
-        renamed afterwards into segments/seg=NNNNN/<table>.  A segment with
-        no rows in a table gets that table written empty, with the schema of
-        the frame its writer uses, so every segment table stays readable.
+    def _read_tables(self, paths: List[str]) -> List[DataFrame]:
+        """One Spark read per table dir, all with one schema: the Spark
+        schema in the dirs' Parquet footers on a POSIX root, else one
+        inference over every dir (never one inference job per dir)."""
+        schema = None
+        if not fsio.has_scheme(self.index_dir):
+            import pyarrow.dataset as pads
+            schema = fsio.footer_schema(
+                [(p, pads.dataset(p, format="parquet")) for p in paths])
+        if schema is None:
+            schema = self.spark.read.parquet(*paths).schema
+        return [self.spark.read.schema(schema).parquet(p) for p in paths]
 
-        Returns the manifest ``add`` actions (``pending`` order) and the
+    def _segment_dir_sources(self, dir_segs: Dict[str, int],
+                             deletes: Optional[DataFrame] = None
+                             ) -> Tuple[DataFrame, DataFrame,
+                                        Optional[DataFrame]]:
+        """The writer's sources read back from existing segment dirs (merges
+        and apply_deletes): each dir's docs, postings and positions rows,
+        tagged with the literal ``_seg`` that ``dir_segs`` gives the dir.
+        Postings are decoded to per-doc-term rows with shard recomputed from
+        doc_id, and the rows of doc_ids in ``deletes`` are dropped.  Returns
+        (docs, per-doc-term, positions); positions is None when no field is
+        position-indexed."""
+        from tantivy4java_spark.searcher import _DECODED_SCHEMA, _decode_blocks
+
+        # each union is coalesced to cluster width: a scan per dir leaves a
+        # partition per small file, and the decode runs a Python pass per
+        # partition (1.6x slower uncoalesced on 8 dirs of a 20k-doc index,
+        # 4 cores)
+        def read(table):
+            paths = [fsio.join(d, table) for d in dir_segs]
+            return reduce(DataFrame.unionByName, [
+                df.withColumn("_seg", F.lit(seg).cast("long"))
+                for df, seg in zip(self._read_tables(paths),
+                                   dir_segs.values())]).coalesce(
+                self.spark.sparkContext.defaultParallelism)
+
+        def live(df):
+            if deletes is None:
+                return df
+            return df.join(deletes, "doc_id", "left_anti")
+
+        pdt = (read("postings")
+               .select("_seg", "field", "term", "first_doc", "count",
+                       "docs_bin", "tfs_bin", "norms_bin")
+               .mapInPandas(_decode_blocks, T.StructType(
+                   _DECODED_SCHEMA.fields
+                   + [T.StructField("_seg", T.LongType())]))
+               .withColumn("shard", F.shiftright(
+                   "doc_id", self.config.shard_bits).cast("long")))
+        positions = None
+        if any(fc.has_positions for fc in self.config.fields):
+            positions = live(read("positions"))
+        return live(read("docs")), live(pdt), positions
+
+    def _write_tables(self, docs: DataFrame, pdt: DataFrame,
+                      positions: Optional[DataFrame], out_dirs: Dict[int, str]
+                      ) -> Tuple[List[dict], Dict[str, float]]:
+        """The table writes of the one segment writer, from ``_seg``-tagged
+        sources: ``docs`` rows, per-doc-term rows ``pdt`` (field, term,
+        shard, doc_id, tf, norm_id) and ``positions`` rows, which None takes
+        from the pos_bin column of ``pdt`` (document sources).  Segment
+        ``s`` is written to ``out_dirs[s]``.
+
+        The docs/per-doc-term frames are cached, per-segment stats are ONE
+        groupBy("_seg") job, and each output table is ONE write job
+        partitioned by ``_seg``, renamed afterwards into <out dir>/<table>.
+        A segment with no rows in a table gets that table written empty,
+        with the schema of the frame its writer uses, so every segment
+        table stays readable.
+
+        Returns the manifest ``add`` actions (``out_dirs`` order) and the
         chained phase times.  Nothing reaches the manifest here: the caller
         appends the actions once every write of the call has finished, so a
         failure mid-call commits none of its segments."""
         clock = _PhaseClock()
         cfg = self.config
         dp = self.spark.sparkContext.defaultParallelism
-        gd = self._docs_frame(src).withColumn("_seg", seg_col).persist()
-        # the pdt frame is a 5-way union -> 5 x dp partitions; every write
-        # job rescans the whole cache, so cache at cluster width (coalesce
-        # is narrow: one task computes the tokenize branch partition plus
-        # its 4 cheap sibling branches) — 3 write jobs x 160 cache-scan
-        # tasks was the measured write-phase bottleneck
-        gpdt = (self._pdt_frame(src).withColumn("_seg", seg_col)
-                .coalesce(dp).persist())
+        gd = docs.persist()
+        # the pdt frame is a union (5-way for documents -> 5 x dp
+        # partitions); every write job rescans the whole cache, so cache at
+        # cluster width (coalesce is narrow: one task computes the tokenize
+        # branch partition plus its 4 cheap sibling branches) — 3 write
+        # jobs x 160 cache-scan tasks was the measured write-phase bottleneck
+        gpdt = pdt.coalesce(dp).persist()
         # Materialize both caches at full cluster width, one job each,
         # BEFORE the writers fan out: writers racing to build the tokenize
         # cache measured 46% slower at 8 cores (200k docs) — concurrent
@@ -844,8 +875,6 @@ class IndexBuilder:
         # let AQE coalesce tiny per-segment shuffles into 1-task Python
         # encodes).  File contents per segment are unchanged: the encode
         # group key gains _seg, and segment doc ranges are disjoint.
-        post_schema = T.StructType(
-            [T.StructField("_seg", T.LongType())] + _POSTINGS_SCHEMA.fields)
         # size the docs files to the data (guide §6): 32 tasks each writing
         # a sliver per segment made 128 tiny files for a 20k-doc build
         total_docs = sum(int(r["_n"]) for r in stat_rows)
@@ -857,8 +886,7 @@ class IndexBuilder:
                             F.col("norm_id").cast("long").alias("norm_id")),
                 "_seg", "field", "term", "shard")
             .sortWithinPartitions("_seg", "field", "term", "shard", "doc_id")
-            .mapInPandas(_encode_blocks_fn(cfg.block_size, with_scores=False,
-                                           with_seg=True), post_schema),
+            .mapInPandas(_encode_blocks_fn(cfg.block_size), _BLOCKS_SCHEMA),
             # per-segment term stats (for global df at merge)
             "termstats": gpdt.groupBy("_seg", "field", "term")
             .agg(F.count(F.lit(1)).cast("long").alias("df"),
@@ -869,14 +897,16 @@ class IndexBuilder:
         if pos_fields:
             # delta-varint positions of position-indexed fields (json fields
             # too: per-dot-path positions for phrase-over-path)
+            if positions is None:
+                positions = gpdt.filter(F.col("field").isin(pos_fields))
             tables["positions"] = self._key_repartition(
-                gpdt.filter(F.col("field").isin(pos_fields))
-                .select("_seg", "field", "term", "doc_id", "norm_id",
-                        "pos_bin"),
+                positions.select("_seg", "field", "term", "doc_id",
+                                 "norm_id", "pos_bin"),
                 "_seg", "field", "term") \
                 .sortWithinPartitions("_seg", "field", "term", "doc_id")
 
-        tmp = self._p("segments", f"_tmp_seg={pending[0]:05d}")
+        first_dir = next(iter(out_dirs.values()))
+        tmp = self._p("segments", "_tmp_" + first_dir.rsplit("/", 1)[-1])
         fsio.delete(self.spark, tmp)
 
         def write(name):
@@ -889,10 +919,9 @@ class IndexBuilder:
         gd.unpersist()
         clock.lap("write")
 
-        # rename tmp/<table>/_seg=<sid> -> segments/seg=NNNNN/<table>
+        # rename tmp/<table>/_seg=<sid> -> <out dir>/<table>
         actions = []
-        for sid in pending:
-            seg_dir = self._p("segments", f"seg={sid:05d}")
+        for sid, seg_dir in out_dirs.items():
             fsio.makedirs(self.spark, seg_dir)
             for name, frame in tables.items():
                 src_dir = fsio.join(tmp, name, f"_seg={sid}")
@@ -933,54 +962,29 @@ class IndexBuilder:
         except Exception:
             return False
 
-    def _merge_intermediate(self, seg_dirs: List[str], out_dir: str) -> None:
-        """One hierarchical-merge level (S9 analog): concat+re-block postings
-        per (field,term,shard) WITHOUT global scoring (that happens only at
-        the final level), fold termstats, union docs/positions."""
-        nparts = self.shuffle_partitions or self.spark.sparkContext.defaultParallelism
-        posts = self.spark.read.parquet(*[os.path.join(d, "postings") for d in seg_dirs])
-        merge_fn = _reblock_fn(self.config.block_size)
-        (posts.repartition(nparts, "field", "term", "shard")
-         .sortWithinPartitions("field", "term", "shard", "first_doc")
-         .mapInPandas(merge_fn, _POSTINGS_SCHEMA)
-         .write.mode("overwrite").parquet(os.path.join(out_dir, "postings")))
-        ts = self.spark.read.parquet(*[os.path.join(d, "termstats") for d in seg_dirs])
-        (ts.groupBy("field", "term")
-         .agg(F.sum("df").cast("long").alias("df"),
-              F.sum("total_tf").cast("long").alias("total_tf"))
-         .write.mode("overwrite").parquet(os.path.join(out_dir, "termstats")))
-        docs = self.spark.read.parquet(*[os.path.join(d, "docs") for d in seg_dirs])
-        docs.write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
-        pos_dirs = [fsio.join(d, "positions") for d in seg_dirs
-                    if fsio.exists(self.spark, fsio.join(d, "positions"))]
-        if pos_dirs:
-            (self.spark.read.parquet(*pos_dirs)
-             .repartition(max(1, nparts // 2), "field", "term")
-             .sortWithinPartitions("field", "term", "doc_id")
-             .write.mode("overwrite").parquet(os.path.join(out_dir, "positions")))
-
     def merge_hierarchical(self, segment_ids: List[int], fanin: int = 8) -> dict:
         """Multi-level merge: fold segments `fanin` at a time into
-        intermediate segments, repeat, finish with the global _merge.
-        At 10^12-file scale this bounds every merge job's input count
-        (reference: process-based parallel merge, CLAUDE.md:163; split merge
-        README.md:712-800)."""
+        intermediate segments, repeat, finish with the global _merge_dirs.
+        Each level is ONE segment-writer pass: group g's input dirs are
+        read back with ``_seg = g`` and its output, re-blocked like a fresh
+        build of those docs, is written to segments/merged_L<level>_<g> —
+        a name no segment id takes, so a later add cannot reuse it.  Every
+        group logs a ``merge_level`` action.  At 10^12-file scale this
+        bounds every merge job's input count (reference: process-based
+        parallel merge, CLAUDE.md:163; split merge README.md:712-800)."""
         level = 0
         dirs = [self._p("segments", f"seg={s:05d}") for s in segment_ids]
         dirs = [d for d in dirs if self._segment_ok(d)]
         while len(dirs) > fanin:
-            next_dirs = []
-            for i in range(0, len(dirs), fanin):
-                group = dirs[i:i + fanin]
-                if len(group) == 1:
-                    next_dirs.append(group[0])
-                    continue
-                out = self._p("segments", f"merged_L{level}_{i // fanin:04d}")
-                self._merge_intermediate(group, out)
+            groups = [dirs[i:i + fanin] for i in range(0, len(dirs), fanin)]
+            merged = {g: self._p("segments", f"merged_L{level}_{g:04d}")
+                      for g, group in enumerate(groups) if len(group) > 1}
+            self._write_tables(*self._segment_dir_sources(
+                {d: g for g in merged for d in groups[g]}), merged)
+            for g, out in merged.items():
                 self._append_manifest({"action": "merge_level", "level": level,
-                                       "inputs": len(group), "out": out})
-                next_dirs.append(out)
-            dirs = next_dirs
+                                       "inputs": len(groups[g]), "out": out})
+            dirs = [merged.get(g, group[0]) for g, group in enumerate(groups)]
             level += 1
         return self._merge_dirs(dirs)
 

@@ -3,7 +3,7 @@
 The reference's posting lists (tantivy's .idx component) store docIDs as
 delta-gaps with bitpacked/VInt blocks of 128 plus skip data.  We reproduce the
 *capability* — compressed docID/tf blocks with per-block skip metadata
-(first/last doc, max tf, block-max BM25 score) — as rows of a Parquet
+(first/last doc, max tf, min fieldnorm id) — as rows of a Parquet
 `postings` table; the codec below runs inside Arrow-batched UDFs only
 (no per-row Python anywhere on the hot path).
 
@@ -102,18 +102,16 @@ def decode_doc_block(buf: bytes, base: int, count: int | None = None) -> np.ndar
 
 def encode_blocks_segmented(group_change: np.ndarray, docs: np.ndarray,
                             tfs: np.ndarray, norms: np.ndarray,
-                            block_size: int = BLOCK_SIZE,
-                            scores: np.ndarray | None = None) -> dict:
+                            block_size: int = BLOCK_SIZE) -> dict:
     """Block-encode many posting lists in one vectorized pass.
 
     Inputs are value-level arrays sorted by (group, doc_id); ``group_change``
     marks the first row of each (field,term,shard) group.  Returns per-BLOCK
     arrays: row_index (index of the block's first value, for key lookup),
     block_id, first_doc, last_doc, count, docs_bin, tfs_bin, norms_bin,
-    max_tf, block_max_score.  The only per-block Python is buffer slicing.
+    max_tf, min_norm_id.  The only per-block Python is buffer slicing.
     """
     n = docs.size
-    out: dict = {k: [] for k in ()}
     gstart_idx = np.nonzero(group_change)[0]
     gid = np.cumsum(group_change) - 1
     r = np.arange(n, dtype=np.int64) - gstart_idx[gid]
@@ -148,16 +146,12 @@ def encode_blocks_segmented(group_change: np.ndarray, docs: np.ndarray,
     # (score(tf,len) <= score(max_tf, min_len) — monotone in both args), so
     # the final merge can compute WAND block bounds from metadata alone.
     min_norm = np.minimum.reduceat(norms, bstart) if n else np.zeros(0, np.int64)
-    if scores is not None and n:
-        bmax = np.maximum.reduceat(scores, bstart)
-    else:
-        bmax = np.zeros(bstart.size, dtype=np.float64)
     return {
         "row_index": bstart, "block_id": block_id, "first_doc": first,
         "last_doc": last, "count": counts, "docs_bin": docs_bin,
         "tfs_bin": tfs_bin, "norms_bin": norms_bin,
         "max_tf": max_tf.astype(np.int64),
-        "min_norm_id": min_norm.astype(np.int64), "block_max_score": bmax,
+        "min_norm_id": min_norm.astype(np.int64),
     }
 
 

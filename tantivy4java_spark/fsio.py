@@ -26,12 +26,16 @@ Notes on object-store semantics:
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 from typing import List
 
 _SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://")
+
+# footer key under which Spark stores a table's Spark schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def has_scheme(path: str) -> bool:
@@ -188,3 +192,27 @@ def rename(spark, src: str, dst: str) -> None:
         return
     fs, jvm = _fs(spark, src)
     fs.rename(_hpath(jvm, src), _hpath(jvm, dst))
+
+
+def footer_schema(tables):
+    """The one Spark schema that Spark wrote into the Parquet footers of
+    ``tables``, a list of (POSIX table dir, its pyarrow dataset), with the
+    top-level fields nullable as spark.read.parquet makes them: what that
+    read infers, without its inference job.  None (Spark infers) when a dir
+    is partitioned or empty, a footer has no Spark schema, or the dirs
+    disagree."""
+    from pyspark.sql import types as T
+    found = set()
+    for root, ds in tables:
+        meta = ds.schema.metadata or {}
+        if SPARK_SCHEMA_KEY not in meta or not ds.files or \
+                any(os.path.dirname(f) != root for f in ds.files):
+            return None
+        fields = json.loads(meta[SPARK_SCHEMA_KEY])["fields"]
+        for f in fields:
+            f["nullable"] = True
+        found.add(json.dumps(fields, sort_keys=True))
+    if len(found) != 1:
+        return None
+    return T.StructType.fromJson({"type": "struct",
+                                  "fields": json.loads(found.pop())})

@@ -8,8 +8,9 @@ segments carry until a merge physically removes them — mirrored here:
 - delete_* append doc_ids to an ``_deletes`` parquet dir + a manifest line;
   the searcher anti-joins them at query time.  On a POSIX root the match
   set and the file come from the driver (pyarrow), with no Spark job.
-- apply_deletes() rewrites postings/docs dropping tombstoned docs and
-  recomputes stats (the "merge preserving deletes" semantics of S7).
+- apply_deletes() folds the committed segments into one through the
+  build's segment writer, dropping tombstoned docs, and recomputes stats
+  (the "merge preserving deletes" semantics of S7).
 """
 
 from __future__ import annotations
@@ -22,7 +23,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from tantivy4java_spark import fsio
 from tantivy4java_spark import queries as Q
@@ -179,14 +179,17 @@ def _config_from_meta(meta: dict):
 
 def apply_deletes(spark: SparkSession, index_dir: str) -> int:
     """Physically remove tombstoned docs (merge-with-deletes, S7) by
-    COMPACTION: the live rows of every table are written as ONE new segment,
-    a ``compact`` manifest action clears the prior adds, and the normal
-    merge rebuilds the canonical root tables (terms, docs, blockmeta, stats)
+    COMPACTION: the segment writer folds every committed segment dir
+    (stats.json) into ONE new segment, reading their docs, postings and
+    positions back without the tombstoned docs and writing them with the
+    table writes of a bulk build.  A ``compact`` manifest action clears the
+    prior adds, the compacted ``add`` carries the writer's stats, and the
+    normal merge rebuilds the root tables (terms, docs, blockmeta, stats)
     from the compacted segment.  Incremental adds after apply_deletes keep
-    working because the manifest's active set matches what's on disk."""
-    from tantivy4java_spark.build import (_POSTINGS_SCHEMA, IndexBuilder,
-                                          _encode_blocks_fn)
-    from tantivy4java_spark.searcher import IndexSearcher, _DECODED_SCHEMA, _decode_blocks
+    working because the manifest's active set matches what's on disk.
+    Returns the number of docs removed."""
+    from tantivy4java_spark.build import IndexBuilder
+    from tantivy4java_spark.searcher import IndexSearcher
 
     del_dir = fsio.join(index_dir, "_deletes")
     if not fsio.isdir_nonempty(spark, del_dir):
@@ -204,66 +207,33 @@ def apply_deletes(spark: SparkSession, index_dir: str) -> int:
             f"StreamingIndexWriter.refresh()) or rollback()")
     s = IndexSearcher(spark, index_dir)
     builder = IndexBuilder(spark, _config_from_meta(s._meta), index_dir)
-    tomb = s._deletes().distinct().persist()
-    n_del = tomb.count()
-
     acts = builder._manifest_actions()
     used = [a["segment"] for a in acts if a.get("action") == "add"]
     sid = (max(used) + 1) if used else 0
-    seg_dir = builder._p("segments", f"seg={sid:05d}")
-    nparts = spark.sparkContext.defaultParallelism
+    seg_name = f"seg={sid:05d}"
+    old_seg_names = {n for n in fsio.listdir(spark, builder._p("segments"))
+                     if n != seg_name}
 
-    # live docs -> compact segment
-    live_docs = s._table("docs").join(tomb, "doc_id", "left_anti")
-    live_docs.write.mode("overwrite").parquet(fsio.join(seg_dir, "docs"))
-    num_docs = spark.read.parquet(fsio.join(seg_dir, "docs")).count()
-
-    # live postings: decode -> drop tombstoned -> re-encode (segment layout,
-    # no scores — the merge recomputes blockmeta from min_norm_id/max_tf)
-    decoded = s.postings().mapInPandas(_decode_blocks, _DECODED_SCHEMA)
-    live = (decoded.join(tomb, "doc_id", "left_anti")
-            .withColumn("shard", F.shiftright(
-                "doc_id", s._meta.get("shard_bits", 16)).cast("long")))
-    enc = _encode_blocks_fn(s._meta.get("block_size", 128), with_scores=False)
-    (live.select("field", "term", "shard", "doc_id", "tf",
-                 F.col("norm_id").cast("long").alias("norm_id"))
-     .repartition(nparts, "field", "term", "shard")
-     .sortWithinPartitions("field", "term", "shard", "doc_id")
-     .mapInPandas(enc, _POSTINGS_SCHEMA)
-     .write.mode("overwrite").parquet(fsio.join(seg_dir, "postings")))
-    (live.groupBy("field", "term")
-     .agg(F.count(F.lit(1)).cast("long").alias("df"),
-          F.sum("tf").cast("long").alias("total_tf"))
-     .write.mode("overwrite").parquet(fsio.join(seg_dir, "termstats")))
-
-    # live positions (phrase queries must not resurrect deleted docs)
-    if s._stats.get("positions_dirs") or \
-            fsio.exists(spark, fsio.join(index_dir, "positions")):
-        (s.positions().join(tomb, "doc_id", "left_anti")
-         .repartition(max(1, nparts // 2), "field", "term")
-         .sortWithinPartitions("field", "term", "doc_id")
-         .write.mode("overwrite").parquet(fsio.join(seg_dir, "positions")))
-    tomb.unpersist()
+    seg_dirs = [fsio.join(index_dir, d.rsplit("/", 1)[0])
+                for d in s._stats["postings_dirs"]]
+    sources = builder._segment_dir_sources(dict.fromkeys(seg_dirs, sid),
+                                           s._deletes())
+    (add,), _ = builder._write_tables(
+        *sources, {sid: builder._p("segments", seg_name)})
+    num_docs = add["num_docs"]
 
     # manifest: clear prior adds, register the compacted segment, re-merge
-    old_seg_names = set()
-    if fsio.exists(spark, builder._p("segments")):
-        old_seg_names = {n for n in fsio.listdir(spark, builder._p("segments"))
-                         if n != f"seg={sid:05d}"}
     _append_manifest(spark, index_dir, {"action": "compact",
                                         "folded": sorted(used)})
-    _append_manifest(spark, index_dir, {"action": "add", "segment": sid,
-                                        "num_docs": int(num_docs),
-                                        "compacted": True})
+    _append_manifest(spark, index_dir, dict(add, compacted=True))
     builder._append_manifest(builder._merge([sid]))
 
-    # cleanup: tombstones, legacy root postings/positions, superseded
-    # segment dirs (the fresh stats references only the compact segment)
+    # cleanup: tombstones and the superseded segment dirs (the fresh stats
+    # references only the compacted segment)
     fsio.delete(spark, del_dir)
-    fsio.delete(spark, fsio.join(index_dir, "postings"))
-    fsio.delete(spark, fsio.join(index_dir, "positions"))
     for name in old_seg_names:
         fsio.delete(spark, fsio.join(index_dir, "segments", name))
+    n_del = s.num_docs - num_docs
     _append_manifest(spark, index_dir, {"action": "apply_deletes",
                                         "removed": int(n_del),
                                         "num_docs": int(num_docs)})

@@ -67,9 +67,6 @@ _HITS_SCHEMA = T.StructType([T.StructField(f.name, f.dataType, False)
 # (Spark, or maintenance's pyarrow file), given so no inference job runs
 _DELETES_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
 
-# footer key under which Spark stores a table's Spark schema
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
 _EXPLAIN_SCHEMA = T.StructType([T.StructField(n, t()) for n, t in [
     ("kind", T.StringType), ("field", T.StringType), ("term", T.StringType),
     ("doc_id", T.LongType), ("tf", T.LongType), ("norm_id", T.IntegerType),
@@ -79,7 +76,9 @@ _EXPLAIN_SCHEMA = T.StructType([T.StructField(n, t()) for n, t in [
 
 
 def _decode_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Vectorized block decode: one pass over the whole Arrow batch."""
+    """Vectorized block decode: one pass over the whole Arrow batch.  A
+    ``_seg`` column (the segment writer's segment-dir source) is repeated
+    onto every decoded value."""
     for pdf in it:
         if len(pdf) == 0:
             continue
@@ -88,13 +87,16 @@ def _decode_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             pdf["first_doc"].to_numpy(dtype=np.int64), counts,
             list(pdf["docs_bin"]), list(pdf["tfs_bin"]), list(pdf["norms_bin"]))
         bov = vals["block_of_value"]
-        yield pd.DataFrame({
+        out = pd.DataFrame({
             "field": pdf["field"].to_numpy()[bov],
             "term": pdf["term"].to_numpy()[bov],
             "doc_id": vals["doc_id"],
             "tf": vals["tf"],
             "norm_id": vals["norm_id"],
         })
+        if "_seg" in pdf:
+            out["_seg"] = pdf["_seg"].to_numpy()[bov]
+        yield out
 
 
 def _fieldnorm_len_col(norm_id_col) -> F.Column:
@@ -122,13 +124,18 @@ class IndexSearcher:
     def _open(self, stats: dict) -> None:
         """Load the committed index view: stats, metadata, and empty
         memos of everything derived from them."""
+        if "postings_dirs" not in stats:
+            raise ValueError(
+                f"{self.index_dir}: stats.json lists no postings_dirs; this "
+                f"is the legacy root-table layout (root postings/ and "
+                f"positions/ tables), which is no longer read — rebuild the "
+                f"index")
         self._stats = stats
         self.num_docs: int = self._stats["num_docs"]
         self.field_stats: Dict[str, dict] = self._stats["fields"]
         self._meta = self._load_metadata()
         self._df_cache: Dict[Tuple[str, str], int] = {}
         self._frames: Dict[str, DataFrame] = {}
-        self._has_blockmeta: Optional[bool] = None
         self._pq_ds_cache: Dict[tuple, object] = {}
         self._agg_schemas: Dict[tuple, T.StructType] = {}
 
@@ -189,55 +196,42 @@ class IndexSearcher:
         return None
 
     # -- table access (DataFrames memoized; underlying scans stay lazy) -----
-    def _table(self, name: str) -> DataFrame:
+    def _table(self, name: str, dirs: Optional[List[str]] = None) -> DataFrame:
+        """The frame over table ``name``, stored in ``dirs`` (default: the
+        root dir ``name``)."""
         if name not in self._frames:
-            schema = self._footer_schema(name)
+            dirs = [name] if dirs is None else dirs
+            schema = self._footer_schema(dirs)
             reader = self.spark.read if schema is None \
                 else self.spark.read.schema(schema)
             self._frames[name] = reader.parquet(
-                os.path.join(self.index_dir, name))
+                *[fsio.join(self.index_dir, d) for d in dirs])
         return self._frames[name]
 
-    def _footer_schema(self, name: str) -> Optional[T.StructType]:
-        """The Spark schema of a POSIX root table, read from the footer
-        Spark wrote into its first file: the schema spark.read.parquet
-        infers, without the inference job.  None (Spark infers) on a URI
-        root, a partitioned dir or a footer without a Spark schema."""
+    def _footer_schema(self, dirs: List[str]) -> Optional[T.StructType]:
+        """The Spark schema that every one of a POSIX root's table ``dirs``
+        carries in its footers (fsio.footer_schema), read through the
+        memoized pyarrow datasets the driver path also uses.  None (Spark
+        infers) on a URI root, an unreadable dir or dirs that disagree."""
         if fsio.has_scheme(self.index_dir):
             return None
         try:
-            ds = self._local_dataset([name])
+            return fsio.footer_schema(
+                [(os.path.join(self.index_dir, d), self._local_dataset([d]))
+                 for d in dirs])
         except (OSError, ValueError):  # Spark raises the canonical error
             return None
-        meta = ds.schema.metadata or {}
-        root = os.path.join(self.index_dir, name)
-        if _SPARK_SCHEMA_KEY not in meta or \
-                any(os.path.dirname(f) != root for f in ds.files):
-            return None
-        return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
 
     def postings(self) -> DataFrame:
         """Posting blocks.  After a metadata-only merge the payload files
         stay in their segment dirs (stats lists them) — segment doc ranges
         are disjoint and each dir is clustered by (field, term, shard,
         doc_id), so the union IS the merged doc-ordered stream."""
-        dirs = self._stats.get("postings_dirs")
-        if dirs:
-            if "postings" not in self._frames:
-                self._frames["postings"] = self.spark.read.parquet(
-                    *[fsio.join(self.index_dir, d) for d in dirs])
-            return self._frames["postings"]
-        return self._table("postings")
+        return self._table("postings", self._stats["postings_dirs"])
 
-    def blockmeta(self) -> Optional[DataFrame]:
+    def blockmeta(self) -> DataFrame:
         """Per-block WAND bounds (field, term, shard, first_doc, count,
-        block_max_score) — written by the metadata-only merge.  None on
-        legacy indexes that carry block_max_score inside the postings rows."""
-        if self._has_blockmeta is None:
-            self._has_blockmeta = fsio.isdir_nonempty(
-                self.spark, fsio.join(self.index_dir, "blockmeta"))
-        if not self._has_blockmeta:
-            return None
+        block_max_score) — written by every commit (metadata-only merge)."""
         return self._table("blockmeta")
 
     def terms(self) -> DataFrame:
@@ -263,15 +257,7 @@ class IndexSearcher:
         # memoized like postings(): repeated phrase queries reuse the same
         # DataFrame, so a preload("positions") persist stays pinned to the
         # frame every later query builds on
-        if "positions" not in self._frames:
-            dirs = self._stats.get("positions_dirs")
-            if dirs:
-                self._frames["positions"] = self.spark.read.parquet(
-                    *[os.path.join(self.index_dir, d) for d in dirs])
-            else:
-                self._frames["positions"] = self.spark.read.parquet(
-                    os.path.join(self.index_dir, "positions"))
-        return self._frames["positions"]
+        return self._table("positions", self._stats["positions_dirs"])
 
     def avgdl(self, field: str) -> float:
         st = self.field_stats.get(field)
@@ -350,24 +336,19 @@ class IndexSearcher:
         if min_block_max is not None:
             # block-level WAND skip: only valid when per-doc score == this
             # term's block contribution (single-term queries)
-            bm = self.blockmeta()
-            if bm is not None:
-                keep = (bm.filter(cond
-                                  & (F.col("block_max_score")
-                                     >= F.lit(float(min_block_max))))
-                        .select("field", "term", "shard", "first_doc"))
-                if shards is not None:
-                    keep = keep.filter(
-                        F.col("shard").isin([int(s) for s in shards]))
-                if shards_df is not None:
-                    keep = keep.join(
-                        F.broadcast(shards_df.select("shard").distinct()),
-                        "shard")
-                p = p.join(F.broadcast(keep),
-                           ["field", "term", "shard", "first_doc"])
-            else:  # legacy layout: bound rides inside the postings rows
-                p = p.filter(
-                    F.col("block_max_score") >= F.lit(float(min_block_max)))
+            keep = (self.blockmeta()
+                    .filter(cond & (F.col("block_max_score")
+                                    >= F.lit(float(min_block_max))))
+                    .select("field", "term", "shard", "first_doc"))
+            if shards is not None:
+                keep = keep.filter(
+                    F.col("shard").isin([int(s) for s in shards]))
+            if shards_df is not None:
+                keep = keep.join(
+                    F.broadcast(shards_df.select("shard").distinct()),
+                    "shard")
+            p = p.join(F.broadcast(keep),
+                       ["field", "term", "shard", "first_doc"])
         return p.mapInPandas(_decode_blocks, _DECODED_SCHEMA)
 
     def _score_decoded(self, decoded: DataFrame,
@@ -1265,9 +1246,9 @@ class IndexSearcher:
                     raise FileNotFoundError(p)
             if len(paths) == 1:
                 cache[key] = pads.dataset(paths[0], format="parquet")
-            else:  # multiple dirs (per-segment tables): union dataset
+            else:  # per-segment tables: a union of the memoized dirs
                 cache[key] = pads.dataset(
-                    [pads.dataset(p, format="parquet") for p in paths])
+                    [self._local_dataset([d]) for d in dirs])
         return cache[key]
 
     def _local_read_failed(self, exc: Exception) -> None:
@@ -1325,7 +1306,7 @@ class IndexSearcher:
         """Posting blocks for (field, term) pairs read driver-side (pyarrow,
         row-group pruned — the files are clustered by field, term, shard).
         None when any postings dir is unreadable locally."""
-        dirs = self._stats.get("postings_dirs") or ["postings"]
+        dirs = self._stats["postings_dirs"]
         fields = sorted({f for f, _ in pairs})
         terms = sorted({t for _, t in pairs})
         filters = [("field", "in", fields), ("term", "in", terms)]
@@ -1733,9 +1714,8 @@ class IndexSearcher:
         budget["rows"] -= sum(dfs[(field, t)] for t in uniq)
         if budget["rows"] < 0:
             return None
-        dirs = self._stats.get("positions_dirs") or ["positions"]
         rows = self._local_parquet(
-            dirs, [("field", "==", field), ("term", "in", uniq)],
+            self._stats["positions_dirs"], [("field", "==", field), ("term", "in", uniq)],
             ["term", "doc_id", "pos_bin", "norm_id"])
         if rows is None:
             return None
@@ -2008,12 +1988,9 @@ class IndexSearcher:
                        for p in pairs)
         if est_rows > self.MAX_DRIVER_SHARD_ROWS:
             return self._scored_pruned_cluster(mode, pairs, weights, mult, k)
-        # shard bounds come from the tiny blockmeta table when present (the
-        # metadata-only-merge layout); legacy indexes aggregate the postings
-        # rows' embedded block_max column
-        meta_table = "blockmeta" if self.blockmeta() is not None else "postings"
+        # shard bounds come from the tiny blockmeta table
         local = self._local_meta(
-            meta_table, [("field", "in", fields), ("term", "in", terms)],
+            "blockmeta", [("field", "in", fields), ("term", "in", terms)],
             ["field", "term", "shard", "count", "block_max_score"])
         if local is not None:
             agg = (local.groupby(["field", "term", "shard"], as_index=False)
@@ -2022,10 +1999,7 @@ class IndexSearcher:
             meta = [(r.field, r.term, int(r.shard), int(r.cnt), float(r.bmax))
                     for r in meta_rows if (r.field, r.term) in idf_map]
         else:
-            src = self.blockmeta()
-            if src is None:
-                src = self.postings()
-            meta_rows = (src
+            meta_rows = (self.blockmeta()
                          .filter(F.col("field").isin(fields) & F.col("term").isin(terms))
                          .groupBy("field", "term", "shard")
                          .agg(F.sum("count").alias("cnt"),
@@ -2110,8 +2084,6 @@ class IndexSearcher:
             pk = F.concat_ws("\x00", F.col("field"), F.col("term"))
             cond = cond & pk.isin([f + "\x00" + t for f, t in pairs])
         src = self.blockmeta()
-        if src is None:
-            src = self.postings()
         bmax = F.max("block_max_score")
         if max(mult.values()) > 1:
             bmax = bmax * F.element_at(F.create_map(*[
@@ -2222,8 +2194,6 @@ class IndexSearcher:
         to_pin = []
         for name in components:
             df = accessors[name]() if name in accessors else self._table(name)
-            if df is None:  # blockmeta on legacy indexes
-                continue
             to_pin.append(df.cache())
         # distinct tables -> independent materialize jobs; run them
         # concurrently so the pin wall time is the slowest table, not the sum

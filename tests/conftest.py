@@ -1,5 +1,4 @@
 import contextlib
-import itertools
 import os
 import shutil
 import sys
@@ -10,7 +9,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
-_JOB_GROUPS = itertools.count()
 
 
 @pytest.fixture(scope="session")
@@ -40,27 +38,39 @@ def spark():
 
 @pytest.fixture()
 def spark_jobs(spark):
-    """Counts the Spark jobs a block launches, by job group::
+    """Counts the Spark jobs a block launches, from any thread::
 
         with spark_jobs() as jobs:
             df.collect()
         assert jobs == []
-    """
-    sc = spark.sparkContext
+
+    The jobs are the status store's jobs with an id above the highest id
+    it held before the block, so jobs a ThreadPoolExecutor worker launches
+    count too (a job group set on the calling thread does not reach them).
+    The store keeps only the last ``spark.ui.retainedJobs`` jobs, so its
+    size stops growing late in a session; the ids keep growing."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def store():
+        # job events reach the status store through the async listener
+        # bus; drain it so no finished job is missed
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.statusStore().jobsList(None)  # newest first
 
     @contextlib.contextmanager
     def counted():
-        group = f"spark_jobs_{next(_JOB_GROUPS)}"  # unique per session
+        held = store()
+        before = held.apply(0).jobId() if held.size() else -1
         jobs: list = []
-        sc.setJobGroup(group, "counted by the spark_jobs fixture")
         try:
             yield jobs
         finally:
-            sc.setJobGroup("", "")
-            # job events reach the status store through the async listener
-            # bus; drain it so no job of the block is missed
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+            held = store()
+            for i in range(held.size()):
+                job_id = held.apply(i).jobId()
+                if job_id <= before:
+                    break
+                jobs.insert(0, job_id)
 
     return counted
 
