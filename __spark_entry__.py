@@ -58,7 +58,7 @@ def _searcher(spark: SparkSession, sf_dir: str) -> IndexSearcher:
         return _SEARCHERS[key]
     import tantivy4java_spark
     tag = hashlib.md5(
-        f"{key}:{tantivy4java_spark.__version__}:7".encode()).hexdigest()[:10]
+        f"{key}:{tantivy4java_spark.__version__}:8".encode()).hexdigest()[:10]
     idx_dir = os.path.join(_cache_root(), f"t4s_docs_index_{tag}")
     if not os.path.exists(os.path.join(idx_dir, "stats.json")):
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -75,7 +75,7 @@ def _events_searcher(spark: SparkSession, sf_dir: str) -> IndexSearcher:
         return _SEARCHERS[key]
     import tantivy4java_spark
     tag = hashlib.md5(
-        f"{key}:{tantivy4java_spark.__version__}:7".encode()).hexdigest()[:10]
+        f"{key}:{tantivy4java_spark.__version__}:8".encode()).hexdigest()[:10]
     idx_dir = os.path.join(_cache_root(), f"t4s_events_index_{tag}")
     if not os.path.exists(os.path.join(idx_dir, "stats.json")):
         ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
@@ -101,7 +101,7 @@ def _jdocs_searcher(spark: SparkSession, sf_dir: str) -> IndexSearcher:
         return _SEARCHERS[key]
     import tantivy4java_spark
     tag = hashlib.md5(
-        f"{key}:{tantivy4java_spark.__version__}:7".encode()).hexdigest()[:10]
+        f"{key}:{tantivy4java_spark.__version__}:8".encode()).hexdigest()[:10]
     idx_dir = os.path.join(_cache_root(), f"t4s_jdocs_index_{tag}")
     if not os.path.exists(os.path.join(idx_dir, "stats.json")):
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -125,7 +125,7 @@ def _enriched_searcher(spark: SparkSession, sf_dir: str) -> IndexSearcher:
         return _SEARCHERS[key]
     import tantivy4java_spark
     tag = hashlib.md5(
-        f"{key}:{tantivy4java_spark.__version__}:7".encode()).hexdigest()[:10]
+        f"{key}:{tantivy4java_spark.__version__}:8".encode()).hexdigest()[:10]
     idx_dir = os.path.join(_cache_root(), f"t4s_enriched_index_{tag}")
     if not os.path.exists(os.path.join(idx_dir, "stats.json")):
         ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))

@@ -761,22 +761,20 @@ def _local_aggregate(searcher, query, aggs: Dict[str, Agg],
         return None
     fields = sorted({f for _, keys, _, metrics in plan.values()
                      for f in list(keys) + [m.field for m in metrics.values()]})
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        # dedupe: a metric over doc_id itself would otherwise request the
-        # column twice and pyarrow raises (silent fallback to the slow path)
-        tbl = searcher._local_dataset(["docs"]).to_table(
-            columns=["doc_id"] + [f for f in fields if f != "doc_id"])
-        for f in fields:
-            if pa.types.is_floating(tbl.schema.field(f).type):
-                col = tbl[f].drop_null()
-                if len(col) and pc.any(pc.is_nan(col)).as_py():
-                    return None  # true NaN: Spark groups/sums it, pandas skips
-        pdf = tbl.to_pandas()
-    except Exception as e:  # noqa: BLE001 - recorded, Spark path runs
-        searcher._local_read_failed(e)
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    # dedupe: a metric over doc_id itself would otherwise request the
+    # column twice and pyarrow raises (silent fallback to the slow path)
+    tbl = searcher._local_table(
+        "docs", None, ["doc_id"] + [f for f in fields if f != "doc_id"])
+    if tbl is None:
         return None
+    for f in fields:
+        if pa.types.is_floating(tbl.schema.field(f).type):
+            col = tbl[f].drop_null()
+            if len(col) and pc.any(pc.is_nan(col)).as_py():
+                return None  # true NaN: Spark groups/sums it, pandas skips
+    pdf = tbl.to_pandas()
     for f in fields:
         if pdf[f].dtype == object and len(pdf):
             vals = pdf[f].dropna()

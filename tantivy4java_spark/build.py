@@ -1,4 +1,4 @@
-"""Index build: segments -> hierarchical merge -> global index tables.
+"""Index build: segments -> hierarchical merge -> a commit that lists them.
 
 Mirrors the reference's build lifecycle (SURVEY.md §3.3) Spark-first:
 
@@ -7,9 +7,10 @@ Mirrors the reference's build lifecycle (SURVEY.md §3.3) Spark-first:
   IndexWriter N threads -> N segments        N doc-range segments written by
   (native/src/index.rs:177)                  one shared pass, one job per table
   writer.commit() -> opstamp                 manifest "add" line per segment
-  QuickwitSplit.convertIndex + mergeSplits   commit: global terms, docs,
-  (native/src/quickwit_split/merge_impl.rs)  blockmeta and stats over the
-                                             segment dirs (no payload rewrite)
+  commit -> meta.json (native/src/index.rs)  stats.json lists the committed
+                                             segment dirs; corpus stats folded
+                                             from the add actions, on the
+                                             driver (no Spark job)
   IndexWriter.merge (core/IndexWriter.java)  the segment writer again, fed the
                                              segment dirs (decoded postings):
                                              hierarchical merge levels and
@@ -18,26 +19,26 @@ Mirrors the reference's build lifecycle (SURVEY.md §3.3) Spark-first:
   (native/src/txlog/actions.rs:182-241)      actions enabling zero-recompute
                                              resume and lock-free appends
 
-Physical layout under ``index_dir``:
-  docs/        doc_id, <id_cols>, content_sha256, len_<f>, norm_<f>
+Physical layout under ``index_dir`` (every table lives in the segment dirs;
+there is no root table):
   segments/seg=NNNNN/postings/   field, term, shard, block_id, first_doc,
                last_doc, count, docs_bin, tfs_bin, norms_bin, max_tf,
-               min_norm_id — payloads stay here after the METADATA-ONLY
-               merge (stats.json lists the dirs; a hierarchical merge level
-               writes segments/merged_L<level>_<g>/ instead); segment doc
-               ranges are disjoint and files are clustered by
-               (field, term, shard, doc_id), so the union is the merged
-               doc-ordered stream
-  blockmeta/   field, term, shard, first_doc, count, block_max_score —
-               decode-free per-block WAND bounds computed at merge from
-               (max_tf, min_norm_id) + global idf/avgdl
+               min_norm_id; segment doc ranges are disjoint and files are
+               clustered by (field, term, shard, doc_id), so the union is
+               the merged doc-ordered stream.  max_tf and min_norm_id give
+               each block's BM25 bound for a query's own weights
+               (scoring.block_max_score).
   segments/<seg>/positions/   field, term, doc_id, norm_id, pos_bin
-               (delta-varint positions; listed in stats)
-  segments/<seg>/termstats/, segments/<seg>/docs/   the segment's df and
-               total_tf per term, and its docs rows
-  terms/       field, term, df, total_tf (range-sharded, sorted)
-  stats.json   per-field num_docs / total_tokens / avgdl (+ global num_docs,
-               postings_dirs, positions_dirs)
+               (delta-varint positions)
+  segments/<seg>/termstats/   field, term, df, total_tf of the segment,
+               sorted by (field, term) in each file; the searcher sums df
+               over the segments
+  segments/<seg>/docs/   doc_id, <id_cols>, content_sha256, len_<f>,
+               norm_<f>, fast columns; sorted by doc_id in each file
+  (a hierarchical merge level writes segments/merged_L<level>_<g>/)
+  stats.json   format_version 2, segment_dirs (the committed segment dirs),
+               num_docs, per-field num_docs / total_tokens / avgdl
+  deletes/     tombstoned doc_ids, until apply_deletes compacts them away
   _manifest/<n>.json   one versioned action file per commit (txlog shape;
                legacy single manifest.jsonl indexes stay readable)
 
@@ -48,10 +49,13 @@ Scale notes (the design target is ~10^12 files on a multi-executor cluster):
   lists are concatenations, never re-sorts.
 - segments are doc-range slices committed independently -> an interrupted
   build resumes from the manifest without recomputing finished segments.
-- the only shuffles are ONE repartition by (_seg,field,term,shard) across
-  all segments a segment-writer pass writes (a batch build, a merge level,
-  a compaction) and the commit's term/docs/blockmeta tables; all scale
-  horizontally with executors.
+- a commit reads and writes only metadata, so its cost does not grow with
+  the index; the price is that df lookups read one termstats dir per
+  segment until a merge folds segments together.
+- the only shuffles are a segment-writer pass's (a batch build, a merge
+  level, a compaction): the postings and positions repartitions by
+  (_seg, field, term[, shard]) and the termstats groupBy, each shared by
+  every segment of the pass; all scale horizontally with executors.
 - tokenization defaults to the pure-Catalyst expression (whole-stage codegen,
   zero Python); the pandas-UDF path is kept for golden parity tests.
 """
@@ -80,7 +84,6 @@ from tantivy4java_spark import fsio
 from tantivy4java_spark.analysis import sql_tokenize_expr, tokenize_udf
 from tantivy4java_spark.fieldnorm import fieldnorm_to_id
 from tantivy4java_spark.schema import FieldConfig, IndexConfig
-from tantivy4java_spark.scoring import B, K1
 
 # the encode's block rows: the postings table plus its ``_seg`` partition
 _BLOCKS_SCHEMA = T.StructType([
@@ -484,25 +487,57 @@ def _encode_blocks_fn(block_size: int):
     return encode
 
 
-def active_segments(actions: List[dict]) -> List[int]:
-    """Effective (non-rolled-back) segment adds, in manifest order.
+def active_adds(actions: List[dict]) -> Dict[int, dict]:
+    """The effective (non-rolled-back) segment adds: segment id -> its
+    latest ``add`` action, in manifest order.
 
     A ``rollback`` action removes the segments it names from the active set
     (IndexWriter.rollback analog — uncommitted adds are discarded); a later
     ``add`` of the same id re-activates it (resume-after-rollback).  A
     ``compact`` action clears the whole set (apply_deletes folded every
     prior segment into the compacted segment added right after it)."""
-    act: List[int] = []
+    act: Dict[int, dict] = {}
     for a in actions:
         if a.get("action") == "add":
-            if a["segment"] not in act:
-                act.append(a["segment"])
+            act[a["segment"]] = a
         elif a.get("action") == "rollback":
-            dropped = set(a.get("segments", []))
-            act = [s for s in act if s not in dropped]
+            for s in a.get("segments", []):
+                act.pop(s, None)
         elif a.get("action") == "compact":
-            act = []
+            act.clear()
     return act
+
+
+def active_segments(actions: List[dict]) -> List[int]:
+    """Effective segment ids, in manifest order (see active_adds)."""
+    return list(active_adds(actions))
+
+
+# stats.json layout: version 2 lists the committed segment dirs, and every
+# table is read from them.  Older indexes have root tables (the term
+# dictionary, the docs and the block bounds, or the postings) that nothing
+# reads now.
+STATS_FORMAT_VERSION = 2
+
+# the tombstone dir at the index root.  Its name must not start with "_" or
+# ".": Spark treats such input paths as hidden and warns on every read.
+DELETES_DIR = "deletes"
+
+
+def read_stats(spark: SparkSession, index_dir: str) -> dict:
+    """The committed stats.json of ``index_dir``.  Raises ValueError when it
+    was written in an older layout: the searcher would read it wrongly, and
+    a commit on top of it would leave its root tables stale."""
+    stats = json.loads(fsio.read_text(spark, fsio.join(index_dir,
+                                                       "stats.json")))
+    version = stats.get("format_version", 1)
+    if version != STATS_FORMAT_VERSION:
+        raise ValueError(
+            f"{index_dir}: stats.json has format_version {version}, not "
+            f"{STATS_FORMAT_VERSION}; this index was written in an older "
+            f"layout with root tables, which is no longer read or "
+            f"committed to — rebuild the index")
+    return stats
 
 
 class _PhaseClock:
@@ -739,11 +774,18 @@ class IndexBuilder:
                 + [F.sum(F.col(f"len_{fc.name}")).alias(f"_tok_{fc.name}")
                    for fc in self.config.text_fields])
 
-    def _action_from_stats(self, seg_id: int, srow, t0: float) -> dict:
+    def _action_from_stats(self, seg_id: int, srow, json_tokens: dict,
+                           t0: float) -> dict:
+        """The manifest ``add`` action of one written segment: its docs
+        stats row ``srow`` (None: no docs) and the token totals of its json
+        fields, which have no docs length column."""
         num_docs = int(srow["_n"]) if srow is not None else 0
         field_tokens = {fc.name: int((srow[f"_tok_{fc.name}"]
                                       if srow is not None else 0) or 0)
                         for fc in self.config.text_fields}
+        for fc in self.config.fields:
+            if fc.type == "json":
+                field_tokens[fc.name] = int(json_tokens.get(fc.name) or 0)
         lo = srow["_lo"] if srow is not None else None
         hi = srow["_hi"] if srow is not None else None
         return {
@@ -835,11 +877,14 @@ class IndexBuilder:
         ``s`` is written to ``out_dirs[s]``.
 
         The docs/per-doc-term frames are cached, per-segment stats are ONE
-        groupBy("_seg") job, and each output table is ONE write job
-        partitioned by ``_seg``, renamed afterwards into <out dir>/<table>.
-        A segment with no rows in a table gets that table written empty,
-        with the schema of the frame its writer uses, so every segment
-        table stays readable.
+        groupBy("_seg") job (the per-doc-term cache's job sums the json
+        fields' tokens), and each output table is ONE write job partitioned
+        by ``_seg``, renamed afterwards into <out dir>/<table>.  Segment
+        docs files are sorted by doc_id and termstats files by (field,
+        term), for the readers that look rows up in them.  A segment with
+        no rows in a table gets that table written empty, with the schema
+        of the frame its writer uses, so every segment table stays
+        readable.
 
         Returns the manifest ``add`` actions (``out_dirs`` order) and the
         chained phase times.  Nothing reaches the manifest here: the caller
@@ -860,14 +905,29 @@ class IndexBuilder:
         # cache measured 46% slower at 8 cores (200k docs) — concurrent
         # first-use serializes on the block manager's per-partition load
         # locks while the blocked tasks hold task slots.  The stats agg
-        # doubles as the docs-cache builder; the two jobs are independent.
+        # doubles as the docs-cache builder, and the json token sums (a json
+        # field has no docs length column) as the per-doc-term cache
+        # builder; the two jobs are independent.
+        json_fields = [fc.name for fc in cfg.fields if fc.type == "json"]
+
+        def cache_pdt() -> list:
+            if not json_fields:  # an always-false filter would scan nothing
+                gpdt.count()
+                return []
+            return (gpdt.filter(F.col("field").isin(json_fields))
+                    .groupBy("_seg", "field")
+                    .agg(F.sum("tf").alias("_tok")).collect())
+
         with ThreadPoolExecutor(max_workers=2) as ex:
             f_stats = ex.submit(
                 lambda: gd.groupBy("_seg").agg(*self._stat_exprs()).collect())
-            f_cnt = ex.submit(gpdt.count)
+            f_json = ex.submit(cache_pdt)
             stat_rows = f_stats.result()
-            f_cnt.result()
+            json_rows = f_json.result()
         stats_by_seg = {int(r["_seg"]): r for r in stat_rows}
+        json_by_seg: Dict[int, dict] = {}
+        for r in json_rows:
+            json_by_seg.setdefault(int(r["_seg"]), {})[r["field"]] = r["_tok"]
         clock.lap("stats+cache")
 
         # ONE write job per table across all pending segments (not one per
@@ -875,10 +935,12 @@ class IndexBuilder:
         # let AQE coalesce tiny per-segment shuffles into 1-task Python
         # encodes).  File contents per segment are unchanged: the encode
         # group key gains _seg, and segment doc ranges are disjoint.
-        # size the docs files to the data (guide §6): 32 tasks each writing
-        # a sliver per segment made 128 tiny files for a 20k-doc build
-        total_docs = sum(int(r["_n"]) for r in stat_rows)
-        n_docs_out = min(dp, max(min(dp, 4), math.ceil(total_docs / 100_000)))
+        # Docs files: one per 100k docs of the largest segment.  Each
+        # coalesced task writes one file into every segment it holds rows
+        # of, so a segment gets at most that many files, each sorted by
+        # doc_id (a coalesce is narrow: no shuffle, no extra job).
+        n_docs_out = max([1] + [math.ceil(int(r["_n"]) / 100_000)
+                                for r in stat_rows])
         tables = {
             # block-encoded postings (skew-proof: keyed by field,term,shard)
             "postings": self._key_repartition(
@@ -887,11 +949,13 @@ class IndexBuilder:
                 "_seg", "field", "term", "shard")
             .sortWithinPartitions("_seg", "field", "term", "shard", "doc_id")
             .mapInPandas(_encode_blocks_fn(cfg.block_size), _BLOCKS_SCHEMA),
-            # per-segment term stats (for global df at merge)
+            # per-segment term stats: the searcher sums df over segments
             "termstats": gpdt.groupBy("_seg", "field", "term")
             .agg(F.count(F.lit(1)).cast("long").alias("df"),
-                 F.sum("tf").cast("long").alias("total_tf")),
-            "docs": gd.coalesce(n_docs_out),
+                 F.sum("tf").cast("long").alias("total_tf"))
+            .sortWithinPartitions("_seg", "field", "term"),
+            "docs": gd.coalesce(n_docs_out)
+            .sortWithinPartitions("_seg", "doc_id"),
         }
         pos_fields = [fc.name for fc in cfg.fields if fc.has_positions]
         if pos_fields:
@@ -933,7 +997,8 @@ class IndexBuilder:
                     self.spark.createDataFrame(
                         [], frame.drop("_seg").schema).write.parquet(dst_dir)
             actions.append(self._action_from_stats(
-                sid, stats_by_seg.get(sid), clock.start))
+                sid, stats_by_seg.get(sid), json_by_seg.get(sid, {}),
+                clock.start))
         fsio.delete(self.spark, tmp)
         clock.lap("rename")
         return actions, clock.phases
@@ -962,9 +1027,20 @@ class IndexBuilder:
         except Exception:
             return False
 
+    def _seg_dir(self, seg_id: int) -> str:
+        return self._p("segments", f"seg={seg_id:05d}")
+
+    def _committed_dirs(self) -> set:
+        """The segment dirs the current commit lists (none before the first
+        commit).  Refuses an index in an older layout (read_stats): a commit
+        on top of it would leave its root tables stale."""
+        if not fsio.exists(self.spark, self._p("stats.json")):
+            return set()
+        return set(read_stats(self.spark, self.index_dir)["segment_dirs"])
+
     def merge_hierarchical(self, segment_ids: List[int], fanin: int = 8) -> dict:
         """Multi-level merge: fold segments `fanin` at a time into
-        intermediate segments, repeat, finish with the global _merge_dirs.
+        intermediate segments, repeat, then commit the dirs left.
         Each level is ONE segment-writer pass: group g's input dirs are
         read back with ``_seg = g`` and its output, re-blocked like a fresh
         build of those docs, is written to segments/merged_L<level>_<g> —
@@ -972,9 +1048,10 @@ class IndexBuilder:
         group logs a ``merge_level`` action.  At 10^12-file scale this
         bounds every merge job's input count (reference: process-based
         parallel merge, CLAUDE.md:163; split merge README.md:712-800)."""
+        self._committed_dirs()  # refuse an older layout before any level
         level = 0
-        dirs = [self._p("segments", f"seg={s:05d}") for s in segment_ids]
-        dirs = [d for d in dirs if self._segment_ok(d)]
+        ok = [s for s in segment_ids if self._segment_ok(self._seg_dir(s))]
+        dirs = [self._seg_dir(s) for s in ok]
         while len(dirs) > fanin:
             groups = [dirs[i:i + fanin] for i in range(0, len(dirs), fanin)]
             merged = {g: self._p("segments", f"merged_L{level}_{g:04d}")
@@ -986,181 +1063,65 @@ class IndexBuilder:
                                        "inputs": len(groups[g]), "out": out})
             dirs = [merged.get(g, group[0]) for g, group in enumerate(groups)]
             level += 1
-        return self._merge_dirs(dirs)
+        return self._commit(dirs, ok)
 
     def _merge(self, segment_ids: List[int]) -> dict:
-        """Merge all segment outputs into the global index (S7/S9 analog).
+        """Commit the given segments as the searchable index (S7/S9 analog).
 
         Resilient like the reference's mergeSplits (merge_impl.rs:88-101):
         a segment directory that fails validation is skipped and recorded as
-        a merge_skip manifest action.
+        a merge_skip manifest action.  Segments the current commit already
+        lists were validated when it was made and are not read again, so
+        the commit's cost does not grow with the index.
         """
+        committed = self._committed_dirs()
         ok_segments, skipped = [], []
         for sid in segment_ids:
-            seg_dir = self._p("segments", f"seg={sid:05d}")
-            if self._segment_ok(seg_dir):
+            seg_dir = self._seg_dir(sid)
+            if fsio.relpath(seg_dir, self.index_dir) in committed \
+                    or self._segment_ok(seg_dir):
                 ok_segments.append(sid)
             else:
                 skipped.append(sid)
                 self._append_manifest({"action": "merge_skip", "segment": sid,
                                        "reason": "failed footer validation"})
-        seg_dirs = [self._p("segments", f"seg={s:05d}") for s in ok_segments]
-        action = self._merge_dirs(seg_dirs)
+        action = self._commit([self._seg_dir(s) for s in ok_segments],
+                              ok_segments)
         action["segments"] = ok_segments
         action["skipped"] = skipped
         return action
 
-    def _merge_dirs(self, seg_dirs: List[str]) -> dict:
+    def _commit(self, seg_dirs: List[str], segment_ids: List[int]) -> dict:
+        """Publish ``seg_dirs`` as the searchable index: stats.json lists
+        them (``segment_dirs``) with the corpus stats, and nothing else is
+        written (Tantivy's meta.json, native/src/index.rs:289).  The stats
+        are folded from the manifest ``add`` actions of ``segment_ids``,
+        the segments whose docs the dirs hold: num_docs and each field's
+        token total, so avgdl.  Driver only: no Spark job, and no table
+        that spans the index is rewritten; the searcher sums df over the
+        segment termstats and computes block bounds per query.  Callers
+        check the layout of the commit they replace (_committed_dirs)."""
         t0 = time.time()
-        cfg = self.config
-        nparts = self.shuffle_partitions or self.spark.sparkContext.defaultParallelism
-
-        # global term stats
-        termstats = self.spark.read.parquet(*[os.path.join(d, "termstats") for d in seg_dirs])
-        terms = (termstats.groupBy("field", "term")
-                 .agg(F.sum("df").cast("long").alias("df"),
-                      F.sum("total_tf").cast("long").alias("total_tf")))
-        terms = terms.persist()
-        # RANGE-partitioned term dictionary: at 10^12-file scale the terms
-        # table is billions of rows — a single-partition write would funnel
-        # it through one reducer and every lookup through one monolithic
-        # file.  repartitionByRange + sortWithinPartitions keeps global
-        # (field, term) order ACROSS files, so Parquet min/max column stats
-        # on each range file give the searcher the same pruned lookup an FST
-        # would (the searcher filters field = X AND term IN (...), which
-        # prunes to the one or two range files covering those keys).
-        terms_parts = max(1, nparts // 4)
-
-        def _write_terms():
-            (terms.repartitionByRange(terms_parts, "field", "term")
-             .sortWithinPartitions("field", "term")
-             .write.mode("overwrite").parquet(self._p("terms")))
-
-        seg_docs = self.spark.read.parquet(
-            *[os.path.join(sd, "docs") for sd in seg_dirs])
-
-        def _write_docs():
-            seg_docs.repartitionByRange(max(1, nparts // 4), "doc_id") \
-                .sortWithinPartitions("doc_id") \
-                .write.mode("overwrite").parquet(self._p("docs"))
-
-        len_cols = [fc.name for fc in cfg.text_fields
-                    if f"len_{fc.name}" in seg_docs.columns]
-
-        def _field_stats() -> dict:
-            # corpus stats straight off the segment docs dirs (the same
-            # rows _write_docs rewrites) so this job never waits on it
-            srow = seg_docs.agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[F.sum(f"len_{n}").alias(f"_tok_{n}")
-                  for n in len_cols]).collect()[0]
-            num_docs = int(srow["_n"])
-            stats = {"num_docs": num_docs, "fields": {}}
-            for n in len_cols:
-                tot = int(srow[f"_tok_{n}"] or 0)
-                stats["fields"][n] = {
-                    "num_docs": num_docs,
-                    "total_tokens": tot,
-                    "avgdl": (float(tot) / num_docs) if num_docs else 0.0,
-                }
-            # json fields have no docs-table length column: total tokens =
-            # sum of tf over the field's terms
-            for fc in cfg.fields:
-                if fc.type == "json":
-                    row = (terms.filter(F.col("field") == fc.name)
-                           .agg(F.sum("total_tf").alias("s")).collect()[0])
-                    tot = int(row["s"] or 0)
-                    stats["fields"][fc.name] = {
-                        "num_docs": num_docs, "total_tokens": tot,
-                        "avgdl": (float(tot) / num_docs) if num_docs else 0.0,
-                    }
-            return stats
-
-        # METADATA-ONLY merge of the postings (the 100TB-critical property:
-        # the commit never rewrites posting payloads).  Segment postings
-        # files stay in place — they are already clustered by
-        # (field, term, shard, doc_id) within each segment, and segment doc
-        # ranges are disjoint, so reading the dir list IS the merged,
-        # doc-ordered posting stream.  What the merge computes is the tiny
-        # `blockmeta` table: per block, a DECODE-FREE upper bound on the
-        # BM25 contribution,
-        #     bound = idf_w * max_tf / (max_tf + k1*(1-b + b*min_len/avgdl))
-        # (score is monotone increasing in tf and decreasing in len, so
-        # (max_tf, min_len) bounds every (tf, len) in the block).  WAND only
-        # needs an upper bound; the scan reads ONLY the metadata columns
-        # (parquet prunes the payload binaries), joins the broadcast idf
-        # stats, and shuffles just the blockmeta rows.
-        from tantivy4java_spark.fieldnorm import FIELDNORM_TABLE
-        post_dirs = [os.path.join(d, "postings") for d in seg_dirs]
-
-        def _stats_and_blockmeta() -> dict:
-            stats = _field_stats()
-            num_docs = stats["num_docs"]
-            avgdl_map = {f: s["avgdl"] for f, s in stats["fields"].items()}
-            # non-text (string/keyword) fields: avgdl 1.0 (fieldnorm-free)
-            for fc in cfg.fields:
-                avgdl_map.setdefault(fc.name, 1.0)
-            idf_df = terms.withColumn(
-                "idf_w",
-                F.log(F.lit(1.0)
-                      + (F.lit(float(num_docs)) - F.col("df") + F.lit(0.5))
-                      / (F.col("df") + F.lit(0.5))) * F.lit(K1 + 1.0),
-            ).select("field", "term", "idf_w")
-            seg_postings = self.spark.read.parquet(*post_dirs)
-            len_arr = F.array(*[F.lit(int(x)) for x in FIELDNORM_TABLE])
-            min_len = F.element_at(
-                len_arr, (F.col("min_norm_id") + F.lit(1)).cast("int")) \
-                .cast("double")
-            avgdl_expr = F.element_at(
-                F.create_map(*[x for f, a in avgdl_map.items()
-                               for x in (F.lit(f), F.lit(float(a)))]),
-                F.col("field"))
-            mtf = F.col("max_tf").cast("double")
-            bound = (F.col("idf_w") * mtf
-                     / (mtf + F.lit(K1) * (F.lit(1.0 - B)
-                                           + F.lit(B) * min_len / avgdl_expr)))
-            (seg_postings
-             .select("field", "term", "shard", "first_doc", "count",
-                     "max_tf", "min_norm_id")
-             .join(F.broadcast(idf_df), ["field", "term"])
-             .select("field", "term", "shard", "first_doc", "count",
-                     bound.alias("block_max_score"))
-             .repartitionByRange(max(1, nparts // 4), "field", "term")
-             .sortWithinPartitions("field", "term", "shard", "first_doc")
-             .write.mode("overwrite").parquet(self._p("blockmeta")))
-            return stats
-
-        # ALL commit jobs are mutually independent — terms table, docs
-        # table, and stats+blockmeta (which reads segment dirs + the cached
-        # `terms`, never the rewritten outputs) — so they run as three
-        # concurrent Spark jobs and the commit tail is the SLOWEST of them,
-        # not their sum.  The shared `terms` cache is safe under concurrent
-        # first-use: Spark's block manager takes a per-partition load lock,
-        # so one job computes a partition and the others wait for the block.
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            f_terms = ex.submit(_write_terms)
-            f_docs = ex.submit(_write_docs)
-            f_stats = ex.submit(_stats_and_blockmeta)
-            f_terms.result()
-            f_docs.result()
-            stats = f_stats.result()
-        num_docs = stats["num_docs"]
-        stats["postings_dirs"] = [
-            fsio.relpath(d, self.index_dir) for d in post_dirs]
-
-        # positions stay in their segment directories (already clustered by
-        # (field, term, doc_id)); the searcher reads the dir list from stats —
-        # no merge-time rewrite of the largest table.
-        pos_dirs = [fsio.relpath(fsio.join(d, "positions"), self.index_dir)
-                    for d in seg_dirs
-                    if fsio.exists(self.spark, fsio.join(d, "positions"))]
-        stats["positions_dirs"] = pos_dirs
-
+        adds = active_adds(self._manifest_actions())
+        num_docs, tokens = 0, {}
+        for sid in segment_ids:
+            num_docs += int(adds[sid]["num_docs"])
+            for name, n in adds[sid]["field_tokens"].items():
+                tokens[name] = tokens.get(name, 0) + int(n)
+        stats = {
+            "format_version": STATS_FORMAT_VERSION,
+            "num_docs": num_docs,
+            "fields": {name: {"num_docs": num_docs, "total_tokens": tot,
+                              "avgdl": (float(tot) / num_docs)
+                              if num_docs else 0.0}
+                       for name, tot in tokens.items()},
+            "segment_dirs": [fsio.relpath(d, self.index_dir)
+                             for d in seg_dirs],
+        }
         fsio.write_text(self.spark, self._p("stats.json"),
                         json.dumps(stats, indent=2, sort_keys=True))
-        terms.unpersist()
         return {"action": "commit",
-                "num_docs": int(num_docs), "wall_sec": round(time.time() - t0, 3)}
+                "num_docs": num_docs, "wall_sec": round(time.time() - t0, 3)}
 
     # -- public API ---------------------------------------------------------
     def build(self, df: DataFrame, order_cols: Optional[List[str]] = None,

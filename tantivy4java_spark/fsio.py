@@ -1,10 +1,10 @@
 """Scheme-aware filesystem I/O for index metadata.
 
-The index DATA tables (docs/postings/terms/positions parquet) are read and
+The index DATA tables (docs/postings/termstats/positions parquet) are read and
 written by Spark itself, which already speaks every Hadoop-supported scheme
 (file://, hdfs://, s3a://, abfs://, gs://, ...).  What was posix-only in
 round 1 was the SMALL metadata surface: ``_manifest/manifest.jsonl``,
-``stats.json``, the ``_deletes`` tombstone probe, segment-validity probes and
+``stats.json``, the ``deletes`` tombstone probe, segment-validity probes and
 the apply-deletes table swap.  This module routes those through the JVM
 Hadoop FileSystem (via py4j) whenever the index root carries a URI scheme,
 and keeps the fast posix path for plain local paths.

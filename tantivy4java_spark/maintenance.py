@@ -5,17 +5,16 @@ deleteDocumentsByQuery(q), deleteAllDocuments(), garbageCollectFiles()
 (core/IndexWriter.java:143-202).  Tantivy deletes are tombstones that
 segments carry until a merge physically removes them — mirrored here:
 
-- delete_* append doc_ids to an ``_deletes`` parquet dir + a manifest line;
+- delete_* append doc_ids to the ``deletes`` parquet dir + a manifest line;
   the searcher anti-joins them at query time.  On a POSIX root the match
   set and the file come from the driver (pyarrow), with no Spark job.
 - apply_deletes() folds the committed segments into one through the
-  build's segment writer, dropping tombstoned docs, and recomputes stats
+  build's segment writer, dropping tombstoned docs, and commits it
   (the "merge preserving deletes" semantics of S7).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
@@ -26,6 +25,7 @@ from pyspark.sql import SparkSession
 
 from tantivy4java_spark import fsio
 from tantivy4java_spark import queries as Q
+from tantivy4java_spark.build import DELETES_DIR
 
 
 def _append_manifest(spark: SparkSession, index_dir: str, action: dict) -> None:
@@ -39,7 +39,7 @@ def delete_by_query(spark: SparkSession, index_dir: str, query: Q.Query) -> int:
 
     On a POSIX root the match set comes from the driver fast path, the
     evaluator ``IndexSearcher.count`` uses, and its doc_ids land in
-    ``_deletes`` as one pyarrow file: no Spark job.  Where that path
+    ``deletes/`` as one pyarrow file: no Spark job.  Where that path
     declines (URI root, candidates past ``LOCAL_TOPK_MAX_ROWS``, an
     unsupported node, a read error) the scoring plan runs once on Spark.
     Both count only live docs, so a re-delete returns 0."""
@@ -62,7 +62,7 @@ def delete_by_query(spark: SparkSession, index_dir: str, query: Q.Query) -> int:
             n = matched.count()
             if n:
                 matched.write.mode("append").parquet(
-                    fsio.join(index_dir, "_deletes"))
+                    fsio.join(index_dir, DELETES_DIR))
         finally:
             matched.unpersist()
     _append_manifest(spark, index_dir, dict(action, num_docs=int(n)))
@@ -70,15 +70,15 @@ def delete_by_query(spark: SparkSession, index_dir: str, query: Q.Query) -> int:
 
 
 def _write_tombstones(index_dir: str, ids: np.ndarray) -> None:
-    """Append ``ids`` to a POSIX root's ``_deletes`` as one Parquet file.
+    """Append ``ids`` to a POSIX root's tombstone dir as one Parquet file.
     It is written beside the dir and moved in with os.replace, so readers
     never see a partial file; a temp a crash leaves ends in ``__new``,
     which garbage_collect removes."""
     name = f"part-{uuid.uuid4().hex}-driver.parquet"
-    tmp = os.path.join(index_dir, f"_deletes-{name}__new")
+    tmp = os.path.join(index_dir, f"{DELETES_DIR}-{name}__new")
     try:
         pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64())}), tmp)
-        del_dir = os.path.join(index_dir, "_deletes")
+        del_dir = os.path.join(index_dir, DELETES_DIR)
         os.makedirs(del_dir, exist_ok=True)
         os.replace(tmp, os.path.join(del_dir, name))
     finally:
@@ -99,18 +99,13 @@ def delete_all(spark: SparkSession, index_dir: str) -> int:
 def garbage_collect(spark: SparkSession, index_dir: str) -> list:
     """garbageCollectFiles analog (core/IndexWriter.java:202): delete index
     subdirectories no live reader references — temp ``*__new`` leftovers
-    from interrupted swaps, rolled-back segment dirs, and segment dirs whose
-    postings/positions are no longer listed by stats.json (e.g. superseded
-    by apply_deletes or by a later hierarchical merge level).  Active
-    segment payloads referenced by stats stay.  Returns the deleted paths.
+    from interrupted swaps, rolled-back segment dirs, and segment dirs that
+    stats.json no longer lists (e.g. superseded by apply_deletes or by a
+    later hierarchical merge level).  Committed and active segment dirs
+    stay.  Returns the deleted paths.
     """
-    from tantivy4java_spark.build import active_segments
-    stats = json.loads(fsio.read_text(spark, fsio.join(index_dir, "stats.json")))
-    referenced = set()
-    for key in ("postings_dirs", "positions_dirs"):
-        for d in stats.get(key) or []:
-            # keep the whole segment dir a referenced table lives under
-            referenced.add(d.split("/postings")[0].split("/positions")[0])
+    from tantivy4java_spark.build import active_segments, read_stats
+    referenced = set(read_stats(spark, index_dir)["segment_dirs"])
     from tantivy4java_spark import manifest
     actions = manifest.read_actions(spark, index_dir)
     active = {f"segments/seg={sid:05d}" for sid in active_segments(actions)}
@@ -184,14 +179,13 @@ def apply_deletes(spark: SparkSession, index_dir: str) -> int:
     positions back without the tombstoned docs and writing them with the
     table writes of a bulk build.  A ``compact`` manifest action clears the
     prior adds, the compacted ``add`` carries the writer's stats, and the
-    normal merge rebuilds the root tables (terms, docs, blockmeta, stats)
-    from the compacted segment.  Incremental adds after apply_deletes keep
-    working because the manifest's active set matches what's on disk.
-    Returns the number of docs removed."""
+    normal commit then lists the compacted segment alone.  Incremental adds
+    after apply_deletes keep working because the manifest's active set
+    matches what's on disk.  Returns the number of docs removed."""
     from tantivy4java_spark.build import IndexBuilder
     from tantivy4java_spark.searcher import IndexSearcher
 
-    del_dir = fsio.join(index_dir, "_deletes")
+    del_dir = fsio.join(index_dir, DELETES_DIR)
     if not fsio.isdir_nonempty(spark, del_dir):
         return 0
     from tantivy4java_spark import manifest as _mf
@@ -214,15 +208,14 @@ def apply_deletes(spark: SparkSession, index_dir: str) -> int:
     old_seg_names = {n for n in fsio.listdir(spark, builder._p("segments"))
                      if n != seg_name}
 
-    seg_dirs = [fsio.join(index_dir, d.rsplit("/", 1)[0])
-                for d in s._stats["postings_dirs"]]
+    seg_dirs = [fsio.join(index_dir, d) for d in s._stats["segment_dirs"]]
     sources = builder._segment_dir_sources(dict.fromkeys(seg_dirs, sid),
                                            s._deletes())
     (add,), _ = builder._write_tables(
         *sources, {sid: builder._p("segments", seg_name)})
     num_docs = add["num_docs"]
 
-    # manifest: clear prior adds, register the compacted segment, re-merge
+    # manifest: clear prior adds, register the compacted segment, commit
     _append_manifest(spark, index_dir, {"action": "compact",
                                         "folded": sorted(used)})
     _append_manifest(spark, index_dir, dict(add, compacted=True))

@@ -39,3 +39,14 @@ def tf_norm(tf: float, doc_len: float, avgdl: float) -> float:
 
 def bm25(tf: float, df: int, doc_len: float, num_docs: int, avgdl: float) -> float:
     return idf_weight(df, num_docs) * tf_norm(tf, doc_len, avgdl)
+
+
+def block_max_score(weight, max_tf, min_len, avgdl):
+    """WAND bound of a postings block for one query term: no doc in the
+    block scores above it.  A doc's score grows with tf and shrinks with
+    its length, so the block's (max_tf, min_len) bound every (tf, len) in
+    it.  ``weight`` is the query's weight for the term (idf_weight times
+    the clause count).  The expression has the per-doc score's shape, so
+    the doc holding both extremes scores exactly the bound.  Takes floats,
+    numpy arrays (the driver) or Spark Columns (the cluster) alike."""
+    return weight * max_tf / (max_tf + K1 * ((1.0 - B) + B * min_len / avgdl))

@@ -6,12 +6,18 @@ decode):
   score = idf_w * tf / (tf + k1*(1-b + b*len/avgdl)),
   len decoded from norm_id via a 256-entry literal array (element_at).
 
+Every table is read from the segment dirs the commit lists in stats.json
+(``segment_dirs``); df sums the segments' termstats.
+
 Top-k uses shard-level block-max pruning (WAND analog, SURVEY.md §4 O8):
 shards are doc_id ranges shared by ALL terms, so
-  upper_bound(shard) = sum over query terms of max(block_max_score in shard)
-is a correct per-doc bound.  Two phases: (1) score the most promising shards
-until k exact scores are known -> threshold T = kth best; (2) score only
-shards with bound >= T.  Everything else is pruned without being decoded.
+  upper_bound(shard) = sum over query terms of max(block bound in shard)
+is a correct per-doc bound, where a block's bound is computed per query
+from its postings row (max_tf, min_norm_id) and the query's weight for the
+term (scoring.block_max_score).  Two phases: (1) score the most promising
+shards until k exact scores are known -> threshold T = kth best; (2) score
+only shards with bound >= T.  Everything else is pruned without being
+decoded.
 Reference analog: tantivy's block-max skipping inside TopDocs
 (native/src/searcher/jni_searcher.rs:85); cheap-filter-first short-circuit
 for expensive wildcards (native/src/split_query/query_optimizer.rs:63-115).
@@ -21,7 +27,6 @@ Ties broken by ascending doc_id (tantivy breaks ties by DocAddress order).
 
 from __future__ import annotations
 
-import json
 import logging
 import os
 from collections import Counter
@@ -31,7 +36,7 @@ from typing import Dict, Iterator, List, Optional, Sequence, Tuple
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,7 +46,8 @@ from tantivy4java_spark import queries as Q
 from tantivy4java_spark.analysis import tokenize_text
 from tantivy4java_spark.fieldnorm import FIELDNORM_TABLE
 from tantivy4java_spark.frames import values_frame
-from tantivy4java_spark.scoring import B, K1, idf_weight
+from tantivy4java_spark.build import DELETES_DIR, read_stats
+from tantivy4java_spark.scoring import B, K1, block_max_score, idf_weight
 
 _log = logging.getLogger(__name__)
 
@@ -99,7 +105,19 @@ def _decode_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield out
 
 
-def _fieldnorm_len_col(norm_id_col) -> F.Column:
+def _pairs_cond(pairs: Sequence[Tuple[str, str]]) -> Column:
+    """Rows of exactly the (field, term) ``pairs``: field and term isin,
+    plus the exact pairs where several fields make that a superset."""
+    fields = sorted({f for f, _ in pairs})
+    cond = F.col("field").isin(fields) \
+        & F.col("term").isin(sorted({t for _, t in pairs}))
+    if len(fields) > 1:
+        pair = F.concat_ws("\x00", F.col("field"), F.col("term"))
+        cond = cond & pair.isin([f + "\x00" + t for f, t in pairs])
+    return cond
+
+
+def _fieldnorm_len_col(norm_id_col) -> Column:
     """Decode fieldnorm id -> quantized length, JVM-side (literal 256-array)."""
     arr = F.array(*[F.lit(int(x)) for x in FIELDNORM_TABLE])
     return F.element_at(arr, (norm_id_col + F.lit(1)).cast("int")).cast("double")
@@ -115,21 +133,11 @@ class IndexSearcher:
         self._empties: Dict[str, DataFrame] = {}
         self._warned: set = set()
         self._stale = False
-        self._open(self._read_stats())
-
-    def _read_stats(self) -> dict:
-        return json.loads(fsio.read_text(
-            self.spark, fsio.join(self.index_dir, "stats.json")))
+        self._open(read_stats(self.spark, self.index_dir))
 
     def _open(self, stats: dict) -> None:
         """Load the committed index view: stats, metadata, and empty
         memos of everything derived from them."""
-        if "postings_dirs" not in stats:
-            raise ValueError(
-                f"{self.index_dir}: stats.json lists no postings_dirs; this "
-                f"is the legacy root-table layout (root postings/ and "
-                f"positions/ tables), which is no longer read — rebuild the "
-                f"index")
         self._stats = stats
         self.num_docs: int = self._stats["num_docs"]
         self.field_stats: Dict[str, dict] = self._stats["fields"]
@@ -144,7 +152,7 @@ class IndexSearcher:
         the index moved on since this searcher opened it (apply_deletes
         compacts the pinned files away)."""
         self._pq_ds_cache.clear()
-        stats = self._read_stats()
+        stats = read_stats(self.spark, self.index_dir)
         if stats != self._stats:
             for df in self._frames.values():
                 if df.is_cached:
@@ -196,11 +204,15 @@ class IndexSearcher:
         return None
 
     # -- table access (DataFrames memoized; underlying scans stay lazy) -----
-    def _table(self, name: str, dirs: Optional[List[str]] = None) -> DataFrame:
-        """The frame over table ``name``, stored in ``dirs`` (default: the
-        root dir ``name``)."""
+    def _table_dirs(self, name: str) -> List[str]:
+        """Table ``name``'s dirs, relative to the root: one per committed
+        segment."""
+        return [f"{d}/{name}" for d in self._stats["segment_dirs"]]
+
+    def _table(self, name: str) -> DataFrame:
+        """The frame over table ``name`` of every committed segment."""
         if name not in self._frames:
-            dirs = [name] if dirs is None else dirs
+            dirs = self._table_dirs(name)
             schema = self._footer_schema(dirs)
             reader = self.spark.read if schema is None \
                 else self.spark.read.schema(schema)
@@ -223,21 +235,23 @@ class IndexSearcher:
             return None
 
     def postings(self) -> DataFrame:
-        """Posting blocks.  After a metadata-only merge the payload files
-        stay in their segment dirs (stats lists them) — segment doc ranges
-        are disjoint and each dir is clustered by (field, term, shard,
-        doc_id), so the union IS the merged doc-ordered stream."""
-        return self._table("postings", self._stats["postings_dirs"])
-
-    def blockmeta(self) -> DataFrame:
-        """Per-block WAND bounds (field, term, shard, first_doc, count,
-        block_max_score) — written by every commit (metadata-only merge)."""
-        return self._table("blockmeta")
+        """Posting blocks.  Segment doc ranges are disjoint and each dir is
+        clustered by (field, term, shard, doc_id), so the union IS the
+        merged doc-ordered stream."""
+        return self._table("postings")
 
     def terms(self) -> DataFrame:
-        return self._table("terms")
+        """The term dictionary (field, term, df, total_tf): the segment
+        termstats summed per (field, term)."""
+        if "terms" not in self._frames:
+            self._frames["terms"] = (
+                self._table("termstats").groupBy("field", "term")
+                .agg(F.sum("df").cast("long").alias("df"),
+                     F.sum("total_tf").cast("long").alias("total_tf")))
+        return self._frames["terms"]
 
     def docs(self) -> DataFrame:
+        """The live docs rows of every segment (tombstones removed)."""
         base = self._table("docs")
         d = self._deletes()
         return base.join(d, "doc_id", "left_anti") if d is not None else base
@@ -245,50 +259,36 @@ class IndexSearcher:
     def _deletes(self) -> Optional[DataFrame]:
         """Tombstoned doc_ids (IndexWriter.deleteDocuments analog — S6;
         reference deletes are tombstone-based until a merge applies them)."""
-        path = fsio.join(self.index_dir, "_deletes")
+        path = fsio.join(self.index_dir, DELETES_DIR)
         if not fsio.isdir_nonempty(self.spark, path):
             return None
-        if "_deletes" not in self._frames:
-            self._frames["_deletes"] = \
+        if DELETES_DIR not in self._frames:
+            self._frames[DELETES_DIR] = \
                 self.spark.read.schema(_DELETES_SCHEMA).parquet(path)
-        return self._frames["_deletes"]
+        return self._frames[DELETES_DIR]
 
     def positions(self) -> DataFrame:
         # memoized like postings(): repeated phrase queries reuse the same
         # DataFrame, so a preload("positions") persist stays pinned to the
         # frame every later query builds on
-        return self._table("positions", self._stats["positions_dirs"])
+        return self._table("positions")
 
     def avgdl(self, field: str) -> float:
         st = self.field_stats.get(field)
         return st["avgdl"] if st else 1.0
 
     def term_df(self, field: str, term: str) -> int:
-        key = (field, term)
-        if key not in self._df_cache:
-            rows = (self.terms()
-                    .filter((F.col("field") == field) & (F.col("term") == term))
-                    .select("df").collect())
-            self._df_cache[key] = int(rows[0]["df"]) if rows else 0
-        return self._df_cache[key]
-
-    def _local_meta(self, table: str, filters, columns) -> Optional[pd.DataFrame]:
-        """Driver-side metadata read via pyarrow when the index is on a
-        local/posix path — row-group pruned, no Spark job (the L1-cache
-        analog of the reference's metadata lookups).  Returns None when not
-        applicable; callers fall back to a Spark job."""
-        if fsio.has_scheme(self.index_dir):
-            return None  # non-posix root: the Spark path handles any scheme
-        return self._local_parquet([table], filters, columns)
+        return self.term_dfs([(field, term)])[(field, term)]
 
     def term_dfs(self, pairs: Sequence[Tuple[str, str]]) -> Dict[Tuple[str, str], int]:
+        """Global df of each (field, term), summed over the segments:
+        pyarrow on a POSIX root, else one Spark aggregation.  Memoized."""
         missing = [p for p in pairs if p not in self._df_cache]
         if missing:
             fields = sorted({f for f, _ in missing})
             terms = sorted({t for _, t in missing})
-            local = self._local_meta(
-                "terms", [("field", "in", fields), ("term", "in", terms)],
-                ["field", "term", "df"])
+            local = self._local_terms(
+                [("field", "in", fields), ("term", "in", terms)])
             if local is not None:
                 found = {(f, t): int(d) for f, t, d in
                          zip(local["field"], local["term"], local["df"])}
@@ -315,17 +315,12 @@ class IndexSearcher:
     # -- scored decode of a set of (field, term) --------------------------------
     def _decoded_postings(self, field_terms: Sequence[Tuple[str, str]],
                           shards: Optional[Sequence[int]] = None,
-                          min_block_max: Optional[float] = None,
-                          shards_df: Optional[DataFrame] = None) -> DataFrame:
-        p = self.postings()
-        fields = sorted({f for f, _ in field_terms})
-        terms = sorted({t for _, t in field_terms})
-        cond = F.col("field").isin(fields) & F.col("term").isin(terms)
-        p = p.filter(cond)
-        if len(fields) > 1:
-            # exact pair filter (isin x isin is a superset when multiple fields)
-            pair = F.concat_ws("\x00", F.col("field"), F.col("term"))
-            p = p.filter(pair.isin([f + "\x00" + t for f, t in field_terms]))
+                          shards_df: Optional[DataFrame] = None,
+                          keep: Optional[Column] = None) -> DataFrame:
+        """Decoded postings of ``field_terms``, limited to ``shards`` (a
+        list) or to the ``shard`` column of ``shards_df``, and to the
+        blocks the ``keep`` condition holds for."""
+        p = self.postings().filter(_pairs_cond(field_terms))
         if shards is not None:
             p = p.filter(F.col("shard").isin([int(s) for s in shards]))
         if shards_df is not None:
@@ -333,39 +328,37 @@ class IndexSearcher:
             # touches the driver — a broadcast semi-join prunes the scan
             p = p.join(F.broadcast(shards_df.select("shard").distinct()),
                        "shard")
-        if min_block_max is not None:
-            # block-level WAND skip: only valid when per-doc score == this
-            # term's block contribution (single-term queries)
-            keep = (self.blockmeta()
-                    .filter(cond & (F.col("block_max_score")
-                                    >= F.lit(float(min_block_max))))
-                    .select("field", "term", "shard", "first_doc"))
-            if shards is not None:
-                keep = keep.filter(
-                    F.col("shard").isin([int(s) for s in shards]))
-            if shards_df is not None:
-                keep = keep.join(
-                    F.broadcast(shards_df.select("shard").distinct()),
-                    "shard")
-            p = p.join(F.broadcast(keep),
-                       ["field", "term", "shard", "first_doc"])
+        if keep is not None:
+            p = p.filter(keep)
         return p.mapInPandas(_decode_blocks, _DECODED_SCHEMA)
+
+    def _weight_cols(self, weights: Dict[Tuple[str, str], float]
+                     ) -> Tuple[Column, Column]:
+        """A row's query weight and its field's avgdl, as Columns looked up
+        by the row's (field, term)."""
+        mapping = F.create_map(*[
+            x for (fld, trm), w in weights.items()
+            for x in (F.lit(fld + "\x00" + trm), F.lit(float(w)))
+        ])
+        avgdl_map = F.create_map(*[
+            x for fld in {f for f, _ in weights}
+            for x in (F.lit(fld), F.lit(float(self.avgdl(fld))))
+        ])
+        key = F.concat_ws("\x00", F.col("field"), F.col("term"))
+        return (F.element_at(mapping, key),
+                F.element_at(avgdl_map, F.col("field")))
+
+    def _block_bound(self, weights: Dict[Tuple[str, str], float]) -> Column:
+        """A postings row's WAND bound for the query ``weights``."""
+        w, avgdl = self._weight_cols(weights)
+        return block_max_score(w, F.col("max_tf").cast("double"),
+                               _fieldnorm_len_col(F.col("min_norm_id")),
+                               avgdl)
 
     def _score_decoded(self, decoded: DataFrame,
                        idf_map: Dict[Tuple[str, str], float]) -> DataFrame:
         """(field,term,doc_id,tf,norm_id) -> + score column (JVM exprs only)."""
-        pairs = list(idf_map.items())
-        mapping = F.create_map(*[
-            x for (fld, trm), w in pairs
-            for x in (F.lit(fld + "\x00" + trm), F.lit(float(w)))
-        ])
-        avgdl_map = F.create_map(*[
-            x for fld in {f for f, _ in idf_map}
-            for x in (F.lit(fld), F.lit(float(self.avgdl(fld))))
-        ])
-        key = F.concat_ws("\x00", F.col("field"), F.col("term"))
-        idf_w = F.element_at(mapping, key)
-        avgdl = F.element_at(avgdl_map, F.col("field"))
+        idf_w, avgdl = self._weight_cols(idf_map)
         length = _fieldnorm_len_col(F.col("norm_id"))
         tf = F.col("tf").cast("double")
         score = idf_w * tf / (tf + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * length / avgdl))
@@ -585,12 +578,11 @@ class IndexSearcher:
         term dictionary — NO Spark job, so a fuzzy query costs a single
         scoring job instead of expansion + scoring.  Valid exactly where the
         dictionary is small enough to read driver-side (the same regime as
-        the _local_meta term-df lookups); object-store roots and oversized
+        the driver term-df lookups); object-store roots and oversized
         dictionaries return None and take the cluster path.  As a side
         effect the matched terms' dfs warm _df_cache, so the following
         _idf_map issues no lookup at all."""
-        local = self._local_meta("terms", [("field", "==", q.field)],
-                                 ["term", "df"])
+        local = self._local_terms([("field", "==", q.field)])
         if local is None or len(local) > self.MAX_LOCAL_DICT_ROWS:
             return None
         terms = local["term"].astype(str)
@@ -1251,18 +1243,36 @@ class IndexSearcher:
                     [self._local_dataset([d]) for d in dirs])
         return cache[key]
 
-    def _local_read_failed(self, exc: Exception) -> None:
-        """Record why a driver-side read failed (the query falls back to
-        the Spark paths), warning once per searcher and reason.  A missing
-        file marks the pinned view stale: _local_search_pdf reopens."""
-        reason = f"read_error:{type(exc).__name__}"
+    def _fall_back(self, reason: str, detail: object = "") -> None:
+        """Record why the driver fast path declined a query (it runs on
+        Spark instead), warning once per searcher and reason; a budget
+        overrun warns once whatever its row count."""
         self.last_metrics["fallback_reason"] = reason
+        kind = reason.split(":")[0] if reason.startswith("budget") else reason
+        if kind not in self._warned:
+            self._warned.add(kind)
+            _log.warning("%s: driver fast path declined (%s%s); falling "
+                         "back to Spark", self.index_dir, reason,
+                         f": {detail}" if detail else "")
+
+    def _local_read_failed(self, exc: Exception) -> None:
+        """Record a failed driver-side read (read_error:<ExcClass>).  A
+        missing file marks the pinned view stale: _local_search_pdf
+        reopens."""
         if isinstance(exc, FileNotFoundError):
             self._stale = True
-        if reason not in self._warned:
-            self._warned.add(reason)
-            _log.warning("%s: driver fast path read failed (%s: %s); "
-                         "falling back to Spark", self.index_dir, reason, exc)
+        self._fall_back(f"read_error:{type(exc).__name__}", exc)
+
+    def _spend(self, budget: dict, rows: int) -> bool:
+        """Charge ``rows`` decoded rows to the query's driver budget; False,
+        with the reason recorded, once the query is past
+        LOCAL_TOPK_MAX_ROWS."""
+        budget["rows"] -= rows
+        if budget["rows"] >= 0:
+            return True
+        self._fall_back("budget_exceeded:"
+                        f"{self.LOCAL_TOPK_MAX_ROWS - budget['rows']}")
+        return False
 
     @staticmethod
     def _pads_filter(filters):
@@ -1290,27 +1300,49 @@ class IndexSearcher:
             expr = e if expr is None else expr & e
         return expr
 
-    def _local_parquet(self, dirs: List[str], filters,
-                       columns: List[str]) -> Optional[pd.DataFrame]:
-        """Driver-side pyarrow read over index table dir(s), row-group
-        pruned.  None when any dir is unreadable locally."""
+    def _local_table(self, name: str, filters, columns: List[str]):
+        """Driver-side pyarrow read of table ``name`` over the committed
+        segment dirs, row-group pruned: an Arrow table, or None on a URI
+        root or when a dir is unreadable locally (recorded)."""
+        if fsio.has_scheme(self.index_dir):
+            return None  # the Spark path handles any scheme
         try:
-            return self._local_dataset(dirs).to_table(
-                filter=self._pads_filter(filters),
-                columns=columns).to_pandas()
+            return self._local_dataset(self._table_dirs(name)).to_table(
+                filter=self._pads_filter(filters), columns=columns)
         except Exception as e:  # noqa: BLE001 - recorded, Spark path runs
             self._local_read_failed(e)
             return None
+
+    def _local_parquet(self, name: str, filters,
+                       columns: List[str]) -> Optional[pd.DataFrame]:
+        """_local_table as a pandas frame."""
+        t = self._local_table(name, filters, columns)
+        return None if t is None else t.to_pandas()
+
+    def _local_terms(self, filters) -> Optional[pd.DataFrame]:
+        """The term dictionary read driver-side, the terms() analog: the
+        segment termstats rows that pass ``filters``, df summed per (field,
+        term) and sorted by (field, term), as pandas (field, term, df).
+        Arrow groups and sorts the keys: pandas hash kernels cut strings at
+        the NUL of json term keys."""
+        t = self._local_table("termstats", filters, ["field", "term", "df"])
+        if t is None:
+            return None
+        t = (t.group_by(["field", "term"]).aggregate([("df", "sum")])
+             .sort_by([("field", "ascending"), ("term", "ascending")]))
+        return pd.DataFrame({"field": t["field"].to_pandas(),
+                             "term": t["term"].to_pandas(),
+                             "df": t["df_sum"].to_pandas()})
 
     def _local_postings_blocks(self, pairs) -> Optional[pd.DataFrame]:
         """Posting blocks for (field, term) pairs read driver-side (pyarrow,
         row-group pruned — the files are clustered by field, term, shard).
         None when any postings dir is unreadable locally."""
-        dirs = self._stats["postings_dirs"]
         fields = sorted({f for f, _ in pairs})
         terms = sorted({t for _, t in pairs})
         filters = [("field", "in", fields), ("term", "in", terms)]
-        pdf = self._local_parquet(dirs, filters, self._POSTING_BLOCK_COLS)
+        pdf = self._local_parquet("postings", filters,
+                                  self._POSTING_BLOCK_COLS)
         if pdf is None:
             return None
         if len(fields) > 1:
@@ -1323,9 +1355,9 @@ class IndexSearcher:
 
     def _local_deletes_ids(self) -> Optional[np.ndarray]:
         """Tombstoned doc_ids read driver-side.  Empty array = no deletes;
-        None = a _deletes dir exists but could not be read locally (caller
+        None = a tombstone dir exists but could not be read locally (caller
         must fall back to the cluster path — never silently skip deletes)."""
-        path = os.path.join(self.index_dir, "_deletes")
+        path = os.path.join(self.index_dir, DELETES_DIR)
         # no visible file yet (a writer made the dir, or Spark's append has
         # only its _temporary/ there): no deletes, as Spark reads it
         if not os.path.isdir(path) or \
@@ -1361,7 +1393,7 @@ class IndexSearcher:
             merged = local.sort_values("doc_id", ascending=ascending,
                                        kind="mergesort")
         else:
-            vals = self._local_parquet(["docs"], None, ["doc_id", field])
+            vals = self._local_parquet("docs", None, ["doc_id", field])
             if vals is None:
                 return None
             merged = local.merge(vals, on="doc_id", how="inner")
@@ -1394,6 +1426,7 @@ class IndexSearcher:
         counterpart's float64 expression shape and accumulation order, so
         the two paths agree on scores to rounding noise."""
         if fsio.has_scheme(self.index_dir):
+            self._fall_back("non_posix")
             return None
         for attempt in range(2):
             self._stale = False
@@ -1483,7 +1516,8 @@ class IndexSearcher:
             return self._local_eval_range(q, budget)
         if isinstance(q, Q.Exists):
             return self._local_eval_exists(q, budget)
-        return None  # MLT: Spark path
+        self._fall_back(f"unsupported:{type(q).__name__}")  # MLT
+        return None
 
     def _local_scored_rows(self, pairs: List[Tuple[str, str]],
                            idf_map: Dict[Tuple[str, str], float],
@@ -1492,8 +1526,7 @@ class IndexSearcher:
         per (pair, doc) with columns (doc_id, key, score).  The arithmetic
         mirrors _score_decoded token for token."""
         est = sum(self._df_cache.get(p, self.num_docs + 1) for p in pairs)
-        budget["rows"] -= est
-        if budget["rows"] < 0:
+        if not self._spend(budget, est):
             return None
         blocks = self._local_postings_blocks(pairs)
         if blocks is None:
@@ -1550,8 +1583,7 @@ class IndexSearcher:
         live = [p for p in pairs if dfs.get(p, 0) > 0]
         if not live:
             return self._empty_pdf()
-        budget["rows"] -= sum(dfs[p] for p in live)
-        if budget["rows"] < 0:
+        if not self._spend(budget, sum(dfs[p] for p in live)):
             return None
         blocks = self._local_postings_blocks(live)
         if blocks is None:
@@ -1566,10 +1598,9 @@ class IndexSearcher:
     def _local_all_docs(self, budget: dict) -> Optional[pd.DataFrame]:
         """All doc_ids at constant score 1.0 (MatchAll / the implicit
         AllQuery positive clause of a pure-negative boolean)."""
-        budget["rows"] -= self.num_docs
-        if budget["rows"] < 0:
+        if not self._spend(budget, self.num_docs):
             return None
-        pdf = self._local_parquet(["docs"], None, ["doc_id"])
+        pdf = self._local_parquet("docs", None, ["doc_id"])
         if pdf is None:
             return None
         ids = pdf["doc_id"].to_numpy(np.int64)
@@ -1583,8 +1614,7 @@ class IndexSearcher:
         patterns are generated from re.escape so they sit in the common
         subset).  None = dictionary not local / too large / pattern does
         not compile -> cluster path."""
-        local = self._local_meta("terms", [("field", "==", q.field)],
-                                 ["term"])
+        local = self._local_terms([("field", "==", q.field)])
         if local is None or len(local) > self.MAX_LOCAL_DICT_ROWS:
             return None
         import re
@@ -1711,11 +1741,10 @@ class IndexSearcher:
         dfs = self.term_dfs([(field, t) for t in uniq])
         if any(dfs[(field, t)] == 0 for t in uniq):
             return self._empty_pdf()
-        budget["rows"] -= sum(dfs[(field, t)] for t in uniq)
-        if budget["rows"] < 0:
+        if not self._spend(budget, sum(dfs[(field, t)] for t in uniq)):
             return None
         rows = self._local_parquet(
-            self._stats["positions_dirs"], [("field", "==", field), ("term", "in", uniq)],
+            "positions", [("field", "==", field), ("term", "in", uniq)],
             ["term", "doc_id", "pos_bin", "norm_id"])
         if rows is None:
             return None
@@ -1799,8 +1828,7 @@ class IndexSearcher:
         col = col or field
         if col not in cols:
             return None  # cluster path raises the canonical error
-        budget["rows"] -= self.num_docs
-        if budget["rows"] < 0:
+        if not self._spend(budget, self.num_docs):
             return None
 
         def _align(v):
@@ -1836,7 +1864,7 @@ class IndexSearcher:
             if hi is not None:
                 filters.append((col, "<=" if rng.include_upper else "<",
                                 _align(hi)))
-        pdf = self._local_parquet(["docs"], filters or None, ["doc_id"])
+        pdf = self._local_parquet("docs", filters or None, ["doc_id"])
         if pdf is None:
             return None
         ids = pdf["doc_id"].to_numpy(np.int64)
@@ -1844,10 +1872,11 @@ class IndexSearcher:
                              "score": np.ones(len(ids), dtype=np.float64)})
 
     def _local_arrow_type(self, table: str, col: str):
-        """Arrow type of `col` in an index table dir (from the memoized
+        """Arrow type of `col` in an index table (from the memoized
         dataset; None when unreadable locally)."""
         try:
-            return self._local_dataset([table]).schema.field(col).type
+            return self._local_dataset(
+                self._table_dirs(table)).schema.field(col).type
         except Exception as e:  # noqa: BLE001 - recorded, Spark path runs
             self._local_read_failed(e)
             return None
@@ -1862,7 +1891,7 @@ class IndexSearcher:
             from tantivy4java_spark.build import JSON_PATH_SEP
             base, path = jb
             prefix = f"{path}{JSON_PATH_SEP}"
-            t = self._local_meta("terms", [("field", "==", base)], ["term"])
+            t = self._local_terms([("field", "==", base)])
             if t is None or len(t) > self.MAX_LOCAL_DICT_ROWS:
                 return None
             sub = t[t["term"].str.startswith(prefix)]
@@ -1901,7 +1930,7 @@ class IndexSearcher:
             from tantivy4java_spark.build import JSON_PATH_SEP
             base, path = jb
             prefix = f"{path}{JSON_PATH_SEP}" if path else ""
-            t = self._local_meta("terms", [("field", "==", base)], ["term"])
+            t = self._local_terms([("field", "==", base)])
             if t is None or len(t) > self.MAX_LOCAL_DICT_ROWS:
                 return None
             matched = list(t["term"][t["term"].str.startswith(prefix)]) \
@@ -1913,10 +1942,9 @@ class IndexSearcher:
         docs = self.docs()
         cols = docs.columns
         if q.field not in cols and f"len_{q.field}" in cols:
-            budget["rows"] -= self.num_docs
-            if budget["rows"] < 0:
+            if not self._spend(budget, self.num_docs):
                 return None
-            pdf = self._local_parquet(["docs"], [(f"len_{q.field}", ">", 0)],
+            pdf = self._local_parquet("docs", [(f"len_{q.field}", ">", 0)],
                                       ["doc_id"])
             if pdf is None:
                 return None
@@ -1926,10 +1954,9 @@ class IndexSearcher:
                                                   dtype=np.float64)})
         if q.field not in cols:
             return None  # cluster path raises the canonical error
-        budget["rows"] -= self.num_docs
-        if budget["rows"] < 0:
+        if not self._spend(budget, self.num_docs):
             return None
-        pdf = self._local_parquet(["docs"], None, ["doc_id", q.field])
+        pdf = self._local_parquet("docs", None, ["doc_id", q.field])
         if pdf is None:
             return None
         ids = pdf.loc[pdf[q.field].notna(), "doc_id"].to_numpy(np.int64)
@@ -1970,13 +1997,11 @@ class IndexSearcher:
             # NOT silently drop out of the AND
             return self._empty_scored()
         # a repeated clause counts once per occurrence (tantivy sums every
-        # clause), in the scores and in the shard bounds: its weight is
+        # clause), in the scores and in the block bounds: its weight is
         # scaled, which for c=2 is bit-identical to x + x
         mult = Counter(pairs)
         weights = {p: w * mult[p] for p, w in idf_map.items()}
-        pairs = list(idf_map.keys())
-        fields = sorted({f for f, _ in pairs})
-        terms = sorted({t for _, t in pairs})
+        pairs = list(weights)
         # The per-(term, shard) bound rows are collected to the driver for
         # phase selection.  That is fine while terms x touched-shards stays
         # small, but a high-df term over a 10^12-doc index touches millions
@@ -1987,30 +2012,16 @@ class IndexSearcher:
         est_rows = sum(min(self._df_cache.get(p, self.num_docs), total_shards_ub)
                        for p in pairs)
         if est_rows > self.MAX_DRIVER_SHARD_ROWS:
-            return self._scored_pruned_cluster(mode, pairs, weights, mult, k)
-        # shard bounds come from the tiny blockmeta table
-        local = self._local_meta(
-            "blockmeta", [("field", "in", fields), ("term", "in", terms)],
-            ["field", "term", "shard", "count", "block_max_score"])
-        if local is not None:
-            agg = (local.groupby(["field", "term", "shard"], as_index=False)
-                   .agg(cnt=("count", "sum"), bmax=("block_max_score", "max")))
-            meta_rows = list(agg.itertuples(index=False))
-            meta = [(r.field, r.term, int(r.shard), int(r.cnt), float(r.bmax))
-                    for r in meta_rows if (r.field, r.term) in idf_map]
-        else:
-            meta_rows = (self.blockmeta()
-                         .filter(F.col("field").isin(fields) & F.col("term").isin(terms))
-                         .groupBy("field", "term", "shard")
-                         .agg(F.sum("count").alias("cnt"),
-                              F.max("block_max_score").alias("bmax"))
-                         .collect())
-            meta = [(r["field"], r["term"], int(r["shard"]), int(r["cnt"]), float(r["bmax"]))
-                    for r in meta_rows if (r["field"], r["term"]) in idf_map]
+            return self._scored_pruned_cluster(mode, weights, k)
+        meta = self._local_block_bounds(weights)
+        if meta is None:
+            meta = [(r["field"], r["term"], int(r["shard"]), int(r["cnt"]),
+                     float(r["bmax"]))
+                    for r in self._block_bounds(weights).collect()]
         shards: Dict[int, dict] = {}
         for fld, trm, sh, cnt, bmax in meta:
             s = shards.setdefault(sh, {"bound": 0.0, "cnt": 0, "terms": set()})
-            s["bound"] += bmax * mult[(fld, trm)]
+            s["bound"] += bmax
             s["cnt"] += cnt
             s["terms"].add((fld, trm))
         if mode == "and":
@@ -2021,29 +2032,6 @@ class IndexSearcher:
         if not shards:
             return self._empty_scored()
 
-        # block-level skip: only where a doc's score IS one block's score
-        block_skip = len(pairs) == 1 and mult[pairs[0]] == 1
-
-        def scored_for(shard_ids: Sequence[int],
-                       min_block_max: Optional[float] = None) -> DataFrame:
-            decoded = self._decoded_postings(
-                pairs, shards=shard_ids,
-                min_block_max=min_block_max if block_skip else None)
-            scored = self._score_decoded(decoded, weights)
-            if mode == "and":
-                agg = (scored.groupBy("doc_id")
-                       .agg(F.sum("score").alias("score"),
-                            F.countDistinct("field", "term").alias("_n"))
-                       .filter(F.col("_n") == len(pairs)))
-                scored = agg.select("doc_id", "score")
-            else:
-                scored = scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
-            # deletes MUST apply before the phase-1 threshold is collected:
-            # a deleted doc inflating the threshold would wrongly prune shards
-            # holding live top-k docs (and the len(top1)<k fallback must count
-            # live docs only).
-            return self._apply_deletes(scored)
-
         order = sorted(shards.items(), key=lambda kv: -kv[1]["bound"])
         phase1, cum = [], 0
         for sh, s in order:
@@ -2053,23 +2041,93 @@ class IndexSearcher:
                 break
         if len(phase1) == total_shards:
             self.last_metrics["shards_scored"] = total_shards
-            return scored_for(phase1)
-        top1 = scored_for(phase1).orderBy(F.desc("score"), F.asc("doc_id")) \
-            .limit(k).collect()
+            return self._wand_scored(mode, weights, shards=phase1)
+        top1 = self._wand_scored(mode, weights, shards=phase1) \
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
         if len(top1) < k:
             self.last_metrics["shards_scored"] = total_shards
-            return scored_for(list(shards.keys()))
+            return self._wand_scored(mode, weights, shards=list(shards))
         threshold = top1[-1]["score"]
         survivors = [sh for sh, s in shards.items() if s["bound"] >= threshold]
         self.last_metrics["shards_scored"] = len(survivors)
         self.last_metrics["wand_threshold"] = threshold
-        # single-term: additionally skip individual blocks below the threshold
-        return scored_for(survivors, min_block_max=threshold)
+        return self._wand_scored(mode, weights, shards=survivors,
+                                 threshold=threshold)
+
+    def _local_block_bounds(self, weights: Dict[Tuple[str, str], float]
+                            ) -> Optional[list]:
+        """(field, term, shard, postings count, max block bound) rows for
+        the query ``weights``, from the postings metadata columns read
+        driver-side; None when they cannot be read locally."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        t = self._local_table(
+            "postings", [("field", "in", sorted({f for f, _ in weights})),
+                         ("term", "in", sorted({t for _, t in weights}))],
+            ["field", "term", "shard", "count", "max_tf", "min_norm_id"])
+        if t is None:
+            return None
+        # each row's weight and avgdl; rows of no query pair keep NaN (the
+        # isin x isin read is a superset when the pairs span fields)
+        w = np.full(t.num_rows, np.nan)
+        avgdl = np.ones(t.num_rows)
+        for (fld, trm), wt in weights.items():
+            m = pc.and_(pc.equal(t["field"], fld), pc.equal(t["term"], trm)) \
+                .to_numpy(zero_copy_only=False)
+            w[m], avgdl[m] = wt, self.avgdl(fld)
+        bound = block_max_score(
+            w, t["max_tf"].to_numpy().astype(np.float64),
+            FIELDNORM_TABLE[t["min_norm_id"].to_numpy().astype(np.int64)]
+            .astype(np.float64), avgdl)
+        agg = (t.append_column("bmax", pa.array(bound))
+               .filter(pa.array(~np.isnan(w)))
+               .group_by(["field", "term", "shard"])
+               .aggregate([("count", "sum"), ("bmax", "max")]))
+        return list(zip(agg["field"].to_pylist(), agg["term"].to_pylist(),
+                        agg["shard"].to_pylist(),
+                        agg["count_sum"].to_pylist(),
+                        agg["bmax_max"].to_pylist()))
+
+    def _block_bounds(self, weights: Dict[Tuple[str, str], float]
+                      ) -> DataFrame:
+        """The _local_block_bounds rows as a Spark aggregation over the
+        postings metadata columns: (field, term, shard, cnt, bmax)."""
+        return (self.postings().filter(_pairs_cond(list(weights)))
+                .groupBy("field", "term", "shard")
+                .agg(F.sum("count").alias("cnt"),
+                     F.max(self._block_bound(weights)).alias("bmax")))
+
+    def _wand_scored(self, mode: str, weights: Dict[Tuple[str, str], float],
+                     shards: Optional[Sequence[int]] = None,
+                     shards_df: Optional[DataFrame] = None,
+                     threshold: Optional[float] = None) -> DataFrame:
+        """Exact (doc_id, score) of the pure-term query ``weights`` over the
+        given shards, deletes applied.  A single-term query given the
+        ``threshold`` also skips every block whose bound is below it: there
+        a doc's score IS its block's term score."""
+        pairs = list(weights)
+        keep = None
+        if threshold is not None and len(pairs) == 1:
+            keep = self._block_bound(weights) >= F.lit(float(threshold))
+        scored = self._score_decoded(
+            self._decoded_postings(pairs, shards=shards, shards_df=shards_df,
+                                   keep=keep), weights)
+        if mode == "and":
+            scored = (scored.groupBy("doc_id")
+                      .agg(F.sum("score").alias("score"),
+                           F.countDistinct("field", "term").alias("_n"))
+                      .filter(F.col("_n") == len(pairs))
+                      .select("doc_id", "score"))
+        else:
+            scored = scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        # deletes MUST apply before the phase-1 threshold is collected:
+        # a deleted doc inflating the threshold would wrongly prune shards
+        # holding live top-k docs (and the len(top1)<k fallback must count
+        # live docs only).
+        return self._apply_deletes(scored)
 
     def _scored_pruned_cluster(self, mode: str,
-                               pairs: List[Tuple[str, str]],
                                weights: Dict[Tuple[str, str], float],
-                               mult: Dict[Tuple[str, str], int],
                                k: int) -> DataFrame:
         """Same two-phase shard WAND, but the bound table never leaves the
         cluster: phase-1 shard selection collects only a bounded prefix of
@@ -2077,52 +2135,18 @@ class IndexSearcher:
         via a broadcast semi-join instead of an isin literal.  The algorithm
         (and its oracle-checked results) are identical to the driver-side
         path; only the data movement changes."""
-        fields = sorted({f for f, _ in pairs})
-        terms = sorted({t for _, t in pairs})
-        cond = F.col("field").isin(fields) & F.col("term").isin(terms)
-        if len(fields) > 1:
-            pk = F.concat_ws("\x00", F.col("field"), F.col("term"))
-            cond = cond & pk.isin([f + "\x00" + t for f, t in pairs])
-        src = self.blockmeta()
-        bmax = F.max("block_max_score")
-        if max(mult.values()) > 1:
-            bmax = bmax * F.element_at(F.create_map(*[
-                x for (fld, trm) in pairs
-                for x in (F.lit(fld + "\x00" + trm), F.lit(mult[(fld, trm)]))]),
-                F.concat_ws("\x00", F.col("field"), F.col("term")))
-        bounds = (src.filter(cond)
-                  .groupBy("field", "term", "shard")
-                  .agg(F.sum("count").alias("cnt"), bmax.alias("bmax"))
+        bounds = (self._block_bounds(weights)
                   .groupBy("shard")
                   .agg(F.sum("bmax").alias("bound"),
                        F.sum("cnt").alias("cnt"),
-                       F.countDistinct("field", "term").alias("_nterms")))
+                       F.count(F.lit(1)).alias("_nterms")))
         if mode == "and":
-            bounds = bounds.filter(F.col("_nterms") == len(pairs))
+            bounds = bounds.filter(F.col("_nterms") == len(weights))
         # no persist: the result is consumed lazily by the caller, and the
-        # bounds frame is a cheap metadata aggregation (blockmeta is tiny
-        # relative to postings) — evaluating it twice beats leaking cache
+        # bounds frame reads only the postings metadata columns —
+        # evaluating it twice beats leaking cache
         bounds = bounds.select("shard", "bound", "cnt")
         self.last_metrics["shards_total"] = -1  # not enumerated (by design)
-
-        block_skip = len(pairs) == 1 and mult[pairs[0]] == 1
-
-        def scored_for(shards_df: DataFrame,
-                       min_block_max: Optional[float] = None) -> DataFrame:
-            decoded = self._decoded_postings(
-                pairs, shards_df=shards_df,
-                min_block_max=min_block_max if block_skip else None)
-            scored = self._score_decoded(decoded, weights)
-            if mode == "and":
-                agg = (scored.groupBy("doc_id")
-                       .agg(F.sum("score").alias("score"),
-                            F.countDistinct("field", "term").alias("_n"))
-                       .filter(F.col("_n") == len(pairs)))
-                scored = agg.select("doc_id", "score")
-            else:
-                scored = scored.groupBy("doc_id") \
-                    .agg(F.sum("score").alias("score"))
-            return self._apply_deletes(scored)
 
         # phase 1: a bounded prefix of the best-bound shards is enough to
         # seed the threshold (each shard holds >= 1 posting, so 4k rows
@@ -2139,19 +2163,20 @@ class IndexSearcher:
             return self._empty_scored()
         p1_df = self._frame([(s,) for s in phase1], T.StructType(
             [T.StructField("shard", T.LongType())]))
-        top1 = (scored_for(p1_df)
+        top1 = (self._wand_scored(mode, weights, shards_df=p1_df)
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .limit(k).collect())
         if len(top1) < k:
             # fewer than k hits in the best shards: score everything the
             # bounds table covers (no threshold to prune with)
             self.last_metrics["shards_scored"] = -1
-            return scored_for(bounds)
+            return self._wand_scored(mode, weights, shards_df=bounds)
         threshold = top1[-1]["score"]
         survivors = bounds.filter(F.col("bound") >= F.lit(threshold))
         self.last_metrics["wand_threshold"] = threshold
         self.last_metrics["shards_scored"] = -1
-        return scored_for(survivors, min_block_max=threshold)
+        return self._wand_scored(mode, weights, shards_df=survivors,
+                                 threshold=threshold)
 
     # -- doc retrieval (S14 analog: join hits back to the doc store) ---------------
     def retrieve(self, hits: DataFrame, source: DataFrame,
@@ -2170,10 +2195,9 @@ class IndexSearcher:
         the reference's 45ms unscored search analog).  Takes the driver-side
         fast path when the whole query evaluates locally (zero Spark jobs)."""
         q = Q.normalize(q)
-        if not fsio.has_scheme(self.index_dir):
-            pdf = self._local_search_pdf(q)
-            if pdf is not None:
-                return len(pdf)
+        pdf = self._local_search_pdf(q)
+        if pdf is not None:
+            return len(pdf)
         return self.score_query(q).count()
 
     # -- prewarm (§2.6: preloadComponents/preloadFields analog) -----------------
@@ -2190,7 +2214,7 @@ class IndexSearcher:
                    for f in self._meta.get("fields", [])):
                 components.append("positions")
         accessors = {"postings": self.postings, "positions": self.positions,
-                     "docs": self.docs, "blockmeta": self.blockmeta}
+                     "docs": self.docs, "terms": self.terms}
         to_pin = []
         for name in components:
             df = accessors[name]() if name in accessors else self._table(name)

@@ -4,8 +4,8 @@ Reference analog (SURVEY.md §2.1 S16, §2.5): the txlog's versioned Add
 actions give incremental micro-batch append semantics; `getChangesSince`
 reads deltas.  Spark-first translation: a streaming source ->
 ``foreachBatch`` -> one immutable index segment per micro-batch + a manifest
-Add line; a ``refresh()`` (= commit/merge) folds all segments into the
-queryable global index.  Exactly-once per batch comes from the streaming
+Add line; a ``refresh()`` (= commit) lists all segments as the queryable
+index.  Exactly-once per batch comes from the streaming
 checkpoint (batch id replays are idempotent: segment dirs are keyed by batch
 id and overwritten atomically).
 
@@ -67,8 +67,8 @@ def add_documents(spark: SparkSession, config: IndexConfig, index_dir: str,
     """Append documents to an existing index and (optionally) re-commit.
 
     IndexWriter.addDocument / addJson analog for bulk appends: the rows
-    become a fresh segment; commit=True merges all segments so the update is
-    visible to searchers (reload-to-see-commits)."""
+    become a fresh segment; commit=True commits every active segment, so
+    the update is visible to searchers (reload-to-see-commits)."""
     builder = IndexBuilder(spark, config, index_dir)
     acts = builder._manifest_actions()
     if not acts:
@@ -128,7 +128,7 @@ def _tombstone_prior_versions(spark: SparkSession, index_dir: str,
                               refuse_on_reuse: bool = True) -> tuple:
     """Tombstone the docs whose keys appear in `changed` (they are about to
     be re-indexed as a new segment): ONE distributed semi-join of the docs
-    table against the changed key set -> doc_ids appended to ``_deletes``.
+    table against the changed key set -> doc_ids appended to ``deletes/``.
     No per-key driver queries — the delta can be millions of rows.
 
     Returns ``(n_tombstoned, n_reused)``.  ``n_reused`` counts prior doc_ids
@@ -139,9 +139,9 @@ def _tombstone_prior_versions(spark: SparkSession, index_dir: str,
     any tombstone (state unchanged); otherwise the caller must physically
     compact (apply_deletes) before appending the delta."""
     from tantivy4java_spark import fsio, manifest
+    from tantivy4java_spark.build import DELETES_DIR
     from tantivy4java_spark.searcher import IndexSearcher
-    docs_dir = fsio.join(index_dir, "docs")
-    if not fsio.isdir_nonempty(spark, docs_dir):
+    if not fsio.exists(spark, fsio.join(index_dir, "stats.json")):
         return 0, 0  # never committed: nothing searchable to supersede
     s = IndexSearcher(spark, index_dir)
     docs = s._table("docs")
@@ -186,7 +186,7 @@ def _tombstone_prior_versions(spark: SparkSession, index_dir: str,
         n = prior.count()
         if n:
             prior.write.mode("append").parquet(
-                fsio.join(index_dir, "_deletes"))
+                fsio.join(index_dir, DELETES_DIR))
             manifest.append_action(spark, index_dir, {
                 "action": "delete", "num_docs": int(n),
                 "query": f"prior-versions-of-changed-keys{list(key_cols)}"})
@@ -288,7 +288,7 @@ class StreamingIndexWriter:
         return writer.start()
 
     def refresh(self) -> dict:
-        """Commit: merge all streamed segments into the queryable index
+        """Commit: list all streamed segments as the queryable index
         (reload-to-see-commits semantics, native/src/index.rs:289)."""
         segs = sorted(set(active_segments(self.builder._manifest_actions())))
         action = self.builder._merge(segs)

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from tantivy4java_spark import maintenance as M
 from tantivy4java_spark import queries as Q
-from tantivy4java_spark.build import build_index
+from tantivy4java_spark.build import DELETES_DIR, build_index
 from tantivy4java_spark.corpus import generate_pandas
 from tantivy4java_spark.schema import FieldConfig, IndexConfig
 from tantivy4java_spark.searcher import IndexSearcher
@@ -114,8 +114,8 @@ def test_apply_deletes_rewrites_positions(spark, corpus_pdf, built):
     assert victim not in after
     assert after == before - {victim}
     # tombstone dir is gone AND positions physically exclude the victim
-    assert not os.path.isdir(os.path.join(built, "_deletes")) or \
-        not os.listdir(os.path.join(built, "_deletes"))
+    assert not os.path.isdir(os.path.join(built, DELETES_DIR)) or \
+        not os.listdir(os.path.join(built, DELETES_DIR))
     pos_docs = {r["doc_id"] for r in
                 s3.positions().select("doc_id").distinct().collect()}
     assert victim not in pos_docs

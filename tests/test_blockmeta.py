@@ -1,11 +1,12 @@
-"""Metadata-only merge (no full-data rewrite at commit).
+"""A commit only lists segments; WAND bounds come from block metadata.
 
 Contract:
-- the commit writes NO root postings dir: payloads stay in segment dirs
-  (stats.postings_dirs), clustered by (field, term, shard, doc_id)
-- blockmeta/ holds per-block WAND bounds computed WITHOUT decoding, from
-  (max_tf, min_norm_id) + global idf/avgdl
-- every blockmeta bound is a TRUE upper bound on the block's per-doc BM25
+- the commit writes NO root table: stats.json lists the segment dirs
+  (segment_dirs), and postings, termstats, docs and positions are read from
+  them
+- a block's WAND bound is computed per query, WITHOUT decoding, from the
+  block's postings row (max_tf, min_norm_id) and the query's weight
+- every bound is a TRUE upper bound on the block's per-doc BM25
   contribution (WAND correctness requires never underestimating)
 """
 
@@ -41,19 +42,23 @@ def built(spark, tmp_path_factory):
 
 def test_no_postings_rewrite_at_commit(spark, built):
     s = IndexSearcher(spark, built)
-    assert not os.path.isdir(os.path.join(built, "postings")), \
-        "commit must not rewrite posting payloads into a root dir"
-    assert os.path.isdir(os.path.join(built, "blockmeta"))
-    dirs = s._stats.get("postings_dirs")
-    assert dirs and all(d.startswith("segments/") for d in dirs)
+    for root_table in ("postings", "terms", "docs", "blockmeta"):
+        assert not os.path.exists(os.path.join(built, root_table)), \
+            f"commit wrote a root {root_table} table"
+    dirs = s._stats["segment_dirs"]
+    assert dirs == [f"segments/seg={i:05d}" for i in range(3)]
     for d in dirs:
-        assert os.path.isdir(os.path.join(built, d))
-    # the searcher still serves every posting through the dir list
-    assert s.postings().count() == s.blockmeta().count()
+        for table in ("postings", "termstats", "docs", "positions"):
+            assert os.path.isdir(os.path.join(built, d, table))
+    # the searcher still serves every posting and doc through the dir list
+    assert s.postings().select("field", "term", "shard", "first_doc") \
+        .distinct().count() == s.postings().count()
+    assert s.docs().count() == s.num_docs == 300
 
 
 def test_blockmeta_is_true_upper_bound(spark, built):
-    """Decode every block and verify max true score <= recorded bound."""
+    """Decode every block and verify that the per-query bound of each
+    (term, shard) is at least every doc's true BM25 score there."""
     s = IndexSearcher(spark, built)
     decoded = (s.postings().filter(F.col("field") == "content")
                .mapInPandas(_decode_blocks, _DECODED_SCHEMA).toPandas())
@@ -67,14 +72,21 @@ def test_blockmeta_is_true_upper_bound(spark, built):
     decoded["true_score"] = idf * tf / (tf + K1 * (1.0 - B + B * lens / avgdl))
     decoded["shard"] = decoded["doc_id"].to_numpy() >> 6
     true_max = (decoded.groupby(["term", "shard"])["true_score"].max())
-    bm = (s.blockmeta().filter(F.col("field") == "content")
-          .groupBy("term", "shard")
-          .agg(F.max("block_max_score").alias("bound")).toPandas()
-          .set_index(["term", "shard"])["bound"])
-    joined = true_max.to_frame().join(bm.to_frame(), how="left")
-    assert joined["bound"].notna().all()
-    assert (joined["bound"] + 1e-12 >= joined["true_score"]).all(), \
-        "blockmeta underestimates a block's max score — WAND would drop hits"
+    weights = s._idf_map([("content", t) for t in sorted(dfs)])
+    assert len(weights) == len(dfs)
+    # both readers of the bound: the driver's numpy and the Spark Column
+    local = s._local_block_bounds(weights)
+    cluster = [(r["field"], r["term"], r["shard"], r["cnt"], r["bmax"])
+               for r in s._block_bounds(weights).collect()]
+    bounds = [{(t, sh): b for _, t, sh, _, b in rows}
+              for rows in (local, cluster)]
+    for bound in bounds:
+        assert set(bound) == set(true_max.index)
+        low = [(k, bound[k], v) for k, v in true_max.items()
+               if bound[k] + 1e-12 < v]
+        assert not low, \
+            f"bound below a doc's true score — WAND would drop hits: {low[:3]}"
+    assert bounds[0] == pytest.approx(bounds[1], rel=1e-12)
 
 
 def test_pruned_topk_equals_unpruned(spark, built):

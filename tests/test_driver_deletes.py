@@ -4,7 +4,7 @@ On a POSIX root within LOCAL_TOPK_MAX_ROWS, delete_by_query takes its match
 set from the driver evaluator and writes its tombstones as one pyarrow
 Parquet file, with no Spark job.  These tests pin that it tombstones
 exactly what the Spark path tombstones, that both writers' files are read
-back together by every reader, that a failed write leaves ``_deletes`` as it
+back together by every reader, that a failed write leaves ``deletes/`` as it
 was, and that the manifest records the path each delete took.
 """
 
@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 from tantivy4java_spark import maintenance as M
 from tantivy4java_spark import manifest
 from tantivy4java_spark import queries as Q
-from tantivy4java_spark.build import build_index
+from tantivy4java_spark.build import DELETES_DIR, build_index
 from tantivy4java_spark.corpus import generate_pandas
 from tantivy4java_spark.schema import FieldConfig, IndexConfig
 from tantivy4java_spark.searcher import IndexSearcher
@@ -54,7 +54,7 @@ def copy_of(base, tmp_path):
 
 
 def _tombstones(index_dir: str) -> set:
-    path = os.path.join(index_dir, "_deletes")
+    path = os.path.join(index_dir, DELETES_DIR)
     if not os.path.isdir(path):
         return set()
     return set(pq.read_table(path, columns=["doc_id"])["doc_id"].to_pylist())
@@ -66,7 +66,7 @@ def _last_delete(spark, index_dir: str) -> dict:
 
 
 def _delete_files(index_dir: str) -> list:
-    return sorted(os.listdir(os.path.join(index_dir, "_deletes")))
+    return sorted(os.listdir(os.path.join(index_dir, DELETES_DIR)))
 
 
 QUERIES = {
@@ -133,8 +133,8 @@ def test_redelete_returns_zero_and_adds_no_file(spark, copy_of):
 
 
 def test_failed_write_leaves_deletes_unchanged(spark, copy_of, monkeypatch):
-    """A write that fails before os.replace leaves no file in _deletes, no
-    temp beside it and no manifest line, with or without a _deletes dir."""
+    """A write that fails before os.replace leaves no file in deletes/, no
+    temp beside it and no manifest line, with or without a deletes/ dir."""
     d = copy_of("fail")
 
     def broken_write(table, where, *a, **k):
@@ -143,7 +143,7 @@ def test_failed_write_leaves_deletes_unchanged(spark, copy_of, monkeypatch):
         raise OSError("disk full")
 
     def state():
-        dels = os.path.join(d, "_deletes")
+        dels = os.path.join(d, DELETES_DIR)
         return (sorted(os.listdir(d)),
                 sorted(os.listdir(dels)) if os.path.isdir(dels) else None,
                 len(manifest.read_actions(spark, d)))
@@ -162,14 +162,14 @@ def test_failed_write_leaves_deletes_unchanged(spark, copy_of, monkeypatch):
 
 
 def test_deletes_dir_without_a_visible_file_means_no_deletes(spark, copy_of):
-    """A _deletes dir with no visible file yet (a Spark append holding only
+    """A deletes/ dir with no visible file yet (a Spark append holding only
     _temporary/, or the dir the driver writer made before its move) holds
     no deletes: the fast path stays on and records no read error, and the
     Spark path reads it as empty too."""
     d = copy_of("nofile")
     q = Q.Term("content", "import")
     n = IndexSearcher(spark, d).count(q)
-    dels = os.path.join(d, "_deletes")
+    dels = os.path.join(d, DELETES_DIR)
     os.makedirs(os.path.join(dels, "_temporary", "0"))
     for _ in ("_temporary/ only", "empty dir"):
         s = IndexSearcher(spark, d)
@@ -182,7 +182,7 @@ def test_deletes_dir_without_a_visible_file_means_no_deletes(spark, copy_of):
 
 def test_both_writers_read_back_together(spark, tmp_path, monkeypatch):
     """Tombstones from the pyarrow writer and from Spark (index_changes'
-    upsert) share one _deletes dir; the driver reader, the cluster path and
+    upsert) share one deletes/ dir; the driver reader, the cluster path and
     apply_deletes all honour every one of them."""
     from tantivy4java_spark.streaming import index_changes
     cfg = IndexConfig(fields=[FieldConfig("content", "text"),
@@ -253,7 +253,7 @@ def test_manifest_records_the_delete_path(spark, copy_of, monkeypatch):
     n = M.delete_by_query(spark, uri, Q.Term("content", "shuffle"))
     act = _last_delete(spark, d)
     assert n > 0 and act["num_docs"] == n
-    assert act["path"] == "spark" and "fallback_reason" not in act
+    assert act["path"] == "spark" and act["fallback_reason"] == "non_posix"
     assert IndexSearcher(spark, d).count(Q.Term("content", "shuffle")) == 0
 
 
@@ -285,7 +285,8 @@ def test_docs_schema_is_the_inferred_schema(spark, tmp_path, spark_jobs):
         docs_schema = s._table("docs").schema
         dels_schema = s._deletes().schema
     assert jobs == []
-    assert docs_schema == spark.read.parquet(os.path.join(d, "docs")).schema
+    assert docs_schema == spark.read.parquet(
+        *[os.path.join(d, p) for p in s._table_dirs("docs")]).schema
     assert dels_schema == spark.read.parquet(
-        os.path.join(d, "_deletes")).schema
+        os.path.join(d, DELETES_DIR)).schema
     assert s.docs().count() == 8

@@ -166,12 +166,8 @@ def test_spark_jobs_fixture_counts_a_job(spark, spark_jobs):
     assert len(jobs) >= 1
 
 
-def test_local_runs_zero_spark_jobs(spark, idx, spark_jobs):
-    """The point of the fast path: the whole search(...).collect() round
-    trip runs NO Spark job, for hits, zero hits, field order, a local terms
-    aggregation and the explain of missing terms."""
+def _assert_local_ops_run_zero_jobs(s, spark_jobs):
     from tantivy4java_spark import aggs as A
-    s = IndexSearcher(spark, idx)
     ops = {
         "hit": lambda: s.search(Q.Term("content", "shuffle"), limit=5),
         "zero_hit": lambda: s.search(Q.Term("content", "zzzmissing"),
@@ -195,6 +191,69 @@ def test_local_runs_zero_spark_jobs(spark, idx, spark_jobs):
         assert (len(rows) == 0) == (name not in hits), name
         if not name.startswith("explain"):
             assert s.last_metrics.get("local_path") == 1, name
+
+
+def test_local_runs_zero_spark_jobs(spark, idx, spark_jobs):
+    """The point of the fast path: the whole search(...).collect() round
+    trip runs NO Spark job, for hits, zero hits, field order, a local terms
+    aggregation and the explain of missing terms."""
+    _assert_local_ops_run_zero_jobs(IndexSearcher(spark, idx), spark_jobs)
+
+
+def test_local_runs_zero_spark_jobs_with_appended_segments(
+        spark, idx, tmp_path, spark_jobs):
+    """The same on an index that grew by appends: the bulk and appended
+    segments' docs dirs carry one footer schema, so no table read infers
+    one."""
+    import shutil
+    from tantivy4java_spark.streaming import add_documents
+    d = str(tmp_path / "appended")
+    shutil.copytree(idx, d)
+    cfg = IndexConfig(fields=[FieldConfig("content", "text"),
+                              FieldConfig("lang", "string")],
+                      id_cols=["doc_id", "lang"], content_col="content",
+                      shard_bits=5)
+    for start in (N, N + 40):
+        extra = generate_pandas(start, 40, seed=start, min_tokens=15,
+                                max_tokens=60)
+        add_documents(spark, cfg, d, spark.createDataFrame(extra))
+    s = IndexSearcher(spark, d)
+    assert len(s._stats["segment_dirs"]) == 4
+    assert s._footer_schema(s._table_dirs("docs")) is not None
+    _assert_local_ops_run_zero_jobs(s, spark_jobs)
+
+
+@pytest.mark.parametrize("reason", ["non_posix", "budget_exceeded",
+                                    "unsupported"])
+def test_fallback_reason_recorded_and_warned_once(spark, idx, monkeypatch,
+                                                  caplog, reason):
+    """Each way the driver fast path declines a query is recorded in
+    last_metrics["fallback_reason"], with one warning per searcher and
+    reason, and the Spark path answers."""
+    import logging
+    from tantivy4java_spark import searcher as S
+    q = Q.Term("content", "import")
+    if reason == "non_posix":
+        monkeypatch.setattr(S.fsio, "has_scheme", lambda p: True)
+        want = "non_posix"
+    elif reason == "budget_exceeded":
+        monkeypatch.setattr(IndexSearcher, "LOCAL_TOPK_MAX_ROWS", 5)
+        # a term's estimate is its df, all over the budget of 5
+        want = "budget_exceeded:" \
+            f"{IndexSearcher(spark, idx).term_df('content', 'import')}"
+    else:
+        q = Q.MoreLikeThis(doc_id=3, field="content", min_doc_freq=1,
+                           min_term_freq=1)
+        want = "unsupported:MoreLikeThis"
+    s = IndexSearcher(spark, idx)
+    with caplog.at_level(logging.WARNING, logger="tantivy4java_spark"):
+        for _ in range(2):
+            rows = s.search(q, limit=5).collect()
+            assert "local_path" not in s.last_metrics
+            assert s.last_metrics.get("fallback_reason") == want
+    warned = [r for r in caplog.records if want in r.getMessage()]
+    assert len(warned) == 1
+    assert len(rows) == 5
 
 
 def test_local_order_by_decimal_field(spark, tmp_path):

@@ -12,6 +12,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from tantivy4java_spark import fsio
 from tantivy4java_spark import maintenance as M
@@ -88,34 +89,38 @@ def test_build_search_delete_on_scheme_root(spark, tmp_path):
                                              limit=200).collect()}
 
 
-def test_terms_dictionary_is_range_sharded(spark, tmp_path):
-    """The terms table must be multiple range-partitioned sorted files (no
-    single-reducer dictionary), and term lookups must prune files via
-    Parquet min/max stats."""
+def test_termstats_are_sorted_and_df_sums_segments(spark, tmp_path):
+    """Each segment's termstats files are sorted by (field, term), so df
+    lookups stay row-group pruned, and a term's df is the sum of its
+    segments' dfs on the driver path and on a URI root alike."""
     pdf = generate_pandas(0, 400, min_tokens=30, max_tokens=120)
     pdf["doc_id"] = range(400)
     cfg = IndexConfig(fields=[FieldConfig("content", "text"),
                               FieldConfig("lang", "string")],
                       id_cols=["doc_id", "lang"], content_col="content")
-    idx = str(tmp_path / "sharded_terms")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    idx = str(tmp_path / "sorted_termstats")
     build_index(spark, spark.createDataFrame(pdf), cfg, idx,
-                doc_id_col="doc_id", shuffle_partitions=16)
-    files = [f for f in os.listdir(os.path.join(idx, "terms"))
-             if f.endswith(".parquet")]
-    assert len(files) > 1, "terms dictionary written through one reducer"
-    # global order across files: per-file (min,max) ranges must not overlap
+                doc_id_col="doc_id", num_segments=3, shuffle_partitions=16)
     import pyarrow.parquet as pq
-    ranges = []
-    for f in files:
-        t = pq.read_table(os.path.join(idx, "terms", f),
-                          columns=["field", "term"])
-        if t.num_rows:
-            ranges.append(((t["field"][0].as_py(), t["term"][0].as_py()),
-                           (t["field"][-1].as_py(), t["term"][-1].as_py())))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, "range files overlap — not a sorted range layout"
-    # and the searcher still resolves dfs correctly through the sharded table
-    s = IndexSearcher(spark, idx)
-    assert s.term_df("content", "import") > 0
+    seg_df = {}
+    for seg in ("seg=00000", "seg=00001", "seg=00002"):
+        ts_dir = os.path.join(idx, "segments", seg, "termstats")
+        for f in os.listdir(ts_dir):
+            if not f.endswith(".parquet"):
+                continue
+            t = pq.read_table(os.path.join(ts_dir, f))
+            keys = list(zip(t["field"].to_pylist(), t["term"].to_pylist()))
+            assert keys == sorted(keys), f"{seg}/{f} is not sorted"
+            for k, n in zip(keys, t["df"].to_pylist()):
+                seg_df[(seg, k)] = n
+    key = ("content", "import")
+    parts = [n for (_, k), n in seg_df.items() if k == key]
+    assert len(parts) == 3, "import should occur in every segment"
+    want = sum("import" in c.split() for c in pdf["content"])
+    assert sum(parts) == want
+    for root in (idx, f"file://{idx}"):
+        s = IndexSearcher(spark, root)
+        assert s.term_df(*key) == want
+        assert s.terms().filter((F.col("field") == key[0])
+                                & (F.col("term") == key[1])) \
+            .collect()[0]["df"] == want

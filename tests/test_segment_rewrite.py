@@ -1,7 +1,7 @@
 """Merges and apply_deletes rewrite segments through the build's one
 segment writer: a compacted or merged segment equals, table by table and
 row for row, a fresh one-segment build of the same documents with the same
-ids.  Also: indexes in the legacy layout fail loudly, the per-segment
+ids.  Also: indexes in an older layout fail loudly, the per-segment
 tables are read without a schema-inference job, and ``spark_jobs`` sees
 jobs launched from a thread pool."""
 
@@ -23,6 +23,7 @@ from tantivy4java_spark.build import IndexBuilder, build_index
 from tantivy4java_spark.corpus import generate_pandas
 from tantivy4java_spark.schema import FieldConfig, IndexConfig
 from tantivy4java_spark.searcher import IndexSearcher
+from tantivy4java_spark.streaming import add_documents
 
 N = 240
 CFG = IndexConfig(fields=[FieldConfig("content", "text"),
@@ -116,9 +117,9 @@ def test_apply_deletes_equals_a_fresh_build_of_the_survivors(spark,
                                                              compacted):
     d, fresh, dead, removed = compacted
     assert removed == len(dead)
-    dirs = IndexSearcher(spark, d)._stats["postings_dirs"]
+    dirs = IndexSearcher(spark, d)._stats["segment_dirs"]
     assert len(dirs) == 1
-    _assert_same_segment(os.path.join(d, os.path.dirname(dirs[0])),
+    _assert_same_segment(os.path.join(d, dirs[0]),
                          os.path.join(fresh, "segments", "seg=00000"))
     s, f = IndexSearcher(spark, d), IndexSearcher(spark, fresh)
     assert s.num_docs == f.num_docs == N - len(dead)
@@ -136,7 +137,7 @@ def test_compacted_add_carries_full_stats(spark, compacted):
     assert add["compacted"] is True
     for key in ("num_docs", "doc_lo", "doc_hi", "field_tokens"):
         assert add[key] == want[key], key
-    assert set(add["field_tokens"]) == {"content", "lang", "tags"}
+    assert set(add["field_tokens"]) == {"content", "lang", "tags", "props"}
 
 
 def test_merge_level_equals_a_fresh_build_of_its_inputs(spark, tmp_path):
@@ -163,8 +164,8 @@ def test_merge_level_equals_a_fresh_build_of_its_inputs(spark, tmp_path):
             os.path.join(d, "segments", f"merged_L0_{g:04d}"),
             os.path.join(fresh, "segments", "seg=00000"))
     s = IndexSearcher(spark, d)
-    assert s._stats["postings_dirs"] == [
-        f"segments/merged_L0_{g:04d}/postings" for g in range(2)]
+    assert s._stats["segment_dirs"] == [
+        f"segments/merged_L0_{g:04d}" for g in range(2)]
     assert [tuple(r) for r in s.search(q, limit=30).collect()] == want_hits
 
 
@@ -181,26 +182,25 @@ def _copy(base, tmp_path, name):
     return d
 
 
-def test_index_without_blockmeta_fails_loudly(spark, three_segments,
-                                              tmp_path, monkeypatch):
-    d = _copy(three_segments, tmp_path, "nobm")
-    shutil.rmtree(os.path.join(d, "blockmeta"))
-    monkeypatch.setattr(IndexSearcher, "LOCAL_TOPK_MAX_ROWS", 0)
-    with pytest.raises(Exception, match="blockmeta"):
-        IndexSearcher(spark, d).search(Q.Term("content", "import"),
-                                       limit=10).collect()
-
-
 def test_legacy_stats_fail_at_open(spark, three_segments, tmp_path):
+    """A stats.json without format_version 2 (the layout with root tables)
+    is refused by the searcher and by every writer that commits."""
     d = _copy(three_segments, tmp_path, "legacy_stats")
     path = os.path.join(d, "stats.json")
     with open(path) as fh:
         stats = json.load(fh)
-    del stats["postings_dirs"]
+    del stats["format_version"]
     with open(path, "w") as fh:
         json.dump(stats, fh)
-    with pytest.raises(ValueError, match="legacy root-table layout"):
+    with pytest.raises(ValueError, match="format_version 1, not 2"):
         IndexSearcher(spark, d)
+    extra = _rows().head(5).assign(doc_id=np.arange(5) + 10_000)
+    with pytest.raises(ValueError, match="format_version 1, not 2"):
+        add_documents(spark, CFG, d, spark.createDataFrame(extra, SCHEMA))
+    with pytest.raises(ValueError, match="format_version 1, not 2"):
+        M.garbage_collect(spark, d)
+    with open(path) as fh:
+        assert json.load(fh) == stats  # the refused commit wrote nothing
 
 
 def test_segment_tables_read_without_jobs(spark, three_segments,
@@ -213,7 +213,7 @@ def test_segment_tables_read_without_jobs(spark, three_segments,
     assert "block_max_score" not in posting_cols
     assert posting_cols == spark.read.parquet(
         *[os.path.join(three_segments, p)
-          for p in s._stats["postings_dirs"]]).columns
+          for p in s._table_dirs("postings")]).columns
     assert position_cols == ["field", "term", "doc_id", "norm_id", "pos_bin"]
 
 
@@ -248,7 +248,7 @@ def test_legacy_block_max_score_column_reads_the_same(spark, three_segments,
         os.remove(os.path.join(pdir, f".{name}.crc"))  # Hadoop's checksum
 
     local = IndexSearcher(spark, d)
-    assert local._footer_schema(local._stats["postings_dirs"]) is None
+    assert local._footer_schema(local._table_dirs("postings")) is None
     assert [[tuple(r) for r in local.search(q, limit=15).collect()]
             for q in qs] == want
     assert local.last_metrics.get("local_path") == 1
